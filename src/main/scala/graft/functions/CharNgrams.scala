@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -41,12 +42,17 @@ case class CharNgrams(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): CharNgrams =
     copy(left = newLeft, right = newRight)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  /** `n` is a literal, so a null or non-positive one is rejected here,
+    * at analysis, instead of at the first executor row. */
+  override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (StringType, IntegerType) if right.foldable =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        right.eval() match {
+          case n: Int if n >= 1 => TypeCheckResult.TypeCheckSuccess
+          case n => TypeCheckResult.TypeCheckFailure(s"char_ngrams requires n >= 1, got $n")
+        }
       case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        TypeCheckResult.TypeCheckFailure(
           s"char_ngrams requires (string, literal int), got " +
             s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
     }

@@ -85,27 +85,43 @@ object SpanOps {
       min("start_us").as("first_seen_us"),
       max("start_us").as("last_seen_us"))
 
-  /** Two-phase search (reader EsIndexedTraceStore.searchTraces): find
-    * matching traceIds (the "ES" phase), then fetch + summarize those
-    * traces (the "Cassandra" phase) — here an index-lookup semi join. */
-  def searchTraces(spans: DataFrame, service: String, startUs: Long, endUs: Long, limit: Int): DataFrame = {
-    val matching = spans
-      .filter(col("service") === service && col("start_us").between(startUs, endUs))
-      .select("trace_id").distinct()
-    spans.join(matching, Seq("trace_id"), "left_semi")
-      .groupBy("trace_id")
-      .agg(min("start_us").as("trace_start_us"), count(lit(1)).as("span_count"))
+  /** Service + time-window search (reader
+    * EsIndexedTraceStore.searchTraces): the traces with a span of
+    * `service` inside the window, summarized over all their spans. */
+  def searchTraces(spans: DataFrame, service: String, startUs: Long, endUs: Long, limit: Int): DataFrame =
+    searchTraceSummaries(spans,
+      Seq(col("service") === service && col("start_us").between(startUs, endUs)), limit)
+
+  /** The reader's search result over the traces matching every span-level
+    * group: per trace its earliest start and span count, newest first
+    * with a deterministic tie-break. The reference finds the ids in the
+    * index, then fetches those traces; here one scan does both, since the
+    * match flags and the summary are one aggregate. A null trace id is
+    * never a result, as no id lookup matches it. */
+  def searchTraceSummaries(spans: DataFrame, spanGroups: Seq[Column], limit: Int): DataFrame =
+    tracesMatchingAll(spans.filter(col("trace_id").isNotNull), spanGroups,
+      min("start_us").as("trace_start_us"), count(lit(1)).as("span_count"))
       .orderBy(col("trace_start_us").desc, col("trace_id"))
       .limit(limit)
-  }
 
   /** Expression-tree search (SpansIndexQueryGenerator): AND of span-level
     * predicate groups — each group must be satisfied by SOME span of the
-    * trace. Composable: each group is a Column over the span relation. */
+    * trace. Composable: each group is a Column over the span relation.
+    * Spans with a null trace id form one trace, like any other id. */
   def searchTracesExpr(spans: DataFrame, spanGroups: Seq[Column]): DataFrame =
-    spanGroups
-      .map(g => spans.filter(g).select("trace_id").distinct())
-      .reduce(_.intersect(_))
+    tracesMatchingAll(spans, spanGroups).select("trace_id")
+
+  /** One `groupBy(trace_id)` over a single scan: `aggs` plus, per group,
+    * whether some span of the trace satisfies it; keeps the traces with
+    * every flag set. */
+  private def tracesMatchingAll(spans: DataFrame, spanGroups: Seq[Column], aggs: Column*): DataFrame = {
+    require(spanGroups.nonEmpty, "trace search needs at least one span-level group")
+    val flags = spanGroups.indices.map(i => s"__group_$i")
+    val all = aggs ++ spanGroups.zip(flags).map { case (g, f) => bool_or(g).as(f) }
+    spans.groupBy("trace_id").agg(all.head, all.tail: _*)
+      .filter(flags.map(col).reduce(_ && _))
+      .drop(flags: _*)
+  }
 
   /** Time-bucketed trace counts (TraceCountsQueryGenerator histogram). */
   def traceCounts(spans: DataFrame, service: String, startUs: Long, endUs: Long, intervalUs: Long): DataFrame =

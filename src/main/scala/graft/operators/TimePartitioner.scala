@@ -1,7 +1,16 @@
 package graft.operators
 
+import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset}
+import scala.util.Try
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Time-partitioned span layout (SURVEY.md §2 A22) — the Spark
   * analogue of the reference's hourly ES index buckets + TTL
@@ -43,10 +52,7 @@ object TimePartitioner {
     * is only reported dropped if the recursive delete actually
     * succeeded. Returns the dropped partition names. */
   def expire(spark: SparkSession, dir: String, cutoffUs: Long): Seq[String] = {
-    val zone = java.time.ZoneId.of(
-      spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID))
-    val cutoffDt =
-      java.time.Instant.ofEpochSecond(0, cutoffUs * 1000).atZone(zone).toLocalDate.toString
+    val cutoffDt = instant(cutoffUs).atZone(sessionZone(spark)).toLocalDate.toString
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
@@ -192,21 +198,93 @@ object TimePartitioner {
     Await.result(Future.sequence(rewrites), Duration.Inf).flatten.sortBy(_._1)
   }
 
-  /** Read back with partition pruning for a time window: the dt/hr
-    * predicates bind to partition directories (PartitionFilters in the
-    * scan), the start_us predicate refines within surviving files. */
+  /** Read back with partition pruning for a time window. Of the layout,
+    * only the root's dt= names and the window's days are listed; the
+    * read takes the window's hr= leaves (a dt-only day, or a day wholly
+    * in the window, is passed whole) with `basePath = dir`, so dt/hr
+    * stay partition columns, under the data schema Spark wrote into one
+    * leaf file's footer: no full-layout listing and no schema-inference
+    * job when the DataFrame is built. The dt/hr predicates still bind
+    * to partition directories (PartitionFilters in the scan), the
+    * start_us predicate refines within surviving files. With no file in
+    * the window, the whole directory is read. */
   def readRange(spark: SparkSession, dir: String, fromUs: Long, toUs: Long): DataFrame = {
-    // dt partition values were produced by date_format, which renders in
-    // the SESSION time zone — derive the directory bounds in the same
+    // dt/hr partition values were produced by date_format, which renders
+    // in the SESSION time zone — derive the directory bounds in the same
     // zone or boundary rows silently fall outside the pruned range
-    val zone = java.time.ZoneId.of(
-      spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID))
-    def dt(us: Long): String =
-      java.time.Instant.ofEpochSecond(0, us * 1000).atZone(zone).toLocalDate.toString
-    val fromDt = dt(fromUs)
-    val toDt = dt(toUs)
-    spark.read.parquet(dir)
-      .filter(col("dt") >= fromDt && col("dt") <= toDt)
+    val zone = sessionZone(spark)
+    def dt(us: Long): String = instant(us).atZone(zone).toLocalDate.toString
+    val root = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    val paths = windowPartitions(fs, root, zone, fromUs, toUs)
+    val footerFile = paths.iterator.flatMap { p =>
+      val files = fs.listFiles(p, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+    }.find(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    val spans = footerFile match {
+      case None => spark.read.parquet(dir)
+      case Some(file) =>
+        val reader = spark.read.option("basePath", dir)
+        val schema = footerSchema(conf, file)
+          .filterNot(_ => spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean)
+        schema.fold(reader)(reader.schema).parquet(paths.map(_.toString): _*)
+    }
+    spans
+      .filter(col("dt") >= dt(fromUs) && col("dt") <= dt(toUs))
       .filter(col("start_us").between(fromUs, toUs))
+  }
+
+  private def sessionZone(spark: SparkSession): ZoneId = ZoneId.of(
+    spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID))
+
+  private def instant(us: Long): Instant = Instant.ofEpochSecond(0, us * 1000)
+
+  /** The partition directories that can hold a row of [fromUs, toUs].
+    * A leaf is kept when its "dt/hr" key lies between the window's
+    * bounds rendered in `zone`; the lower bound uses the smallest UTC
+    * offset the zone takes inside the window and the upper the largest,
+    * so a daylight-saving shift never drops a leaf. */
+  private def windowPartitions(
+      fs: FileSystem, root: Path, zone: ZoneId, fromUs: Long, toUs: Long): Seq[Path] = {
+    val (from, to) = (instant(fromUs), instant(toUs))
+    val rules = zone.getRules
+    val offsets = Iterator.iterate(rules.nextTransition(from))(t => rules.nextTransition(t.getInstant))
+      .takeWhile(t => t != null && !t.getInstant.isAfter(to))
+      .map(_.getOffsetAfter).toSeq :+ rules.getOffset(from)
+    def key(at: Instant, offset: ZoneOffset): String = {
+      val t = LocalDateTime.ofInstant(at, offset)
+      f"${t.toLocalDate}/${t.getHour}%02d"
+    }
+    val lo = key(from, offsets.minBy(_.getTotalSeconds))
+    val hi = key(to, offsets.maxBy(_.getTotalSeconds))
+    def dirs(p: Path, prefix: String): Seq[Path] =
+      fs.listStatus(p).toSeq.filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+        .map(_.getPath)
+    if (!fs.exists(root)) Seq.empty
+    else dirs(root, "dt=").flatMap { day =>
+      val d = day.getName.stripPrefix("dt=")
+      if (s"$d/23" < lo || s"$d/00" > hi) Nil
+      else {
+        val hours = dirs(day, "hr=")
+        val in = hours.filter { h =>
+          val k = s"$d/${h.getName.stripPrefix("hr=")}"
+          k >= lo && k <= hi
+        }
+        // a dt-only day (no hr= leaves) or a day wholly in the window
+        if (in.size == hours.size) Seq(day) else in
+      }
+    }
+  }
+
+  /** The data schema Spark wrote into a parquet file's footer (its row
+    * metadata) — what schema inference returns for that file, read on
+    * the driver instead of by inference's Spark job. None when the file
+    * carries no Spark metadata. */
+  private def footerSchema(conf: Configuration, file: Path): Option[StructType] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)
+      finally reader.close()
+    Option(json).flatMap(j => Try(DataType.fromJson(j)).toOption).collect { case st: StructType => st }
   }
 }

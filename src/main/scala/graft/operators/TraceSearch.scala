@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * one of its spans; inside a group, arbitrary boolean structure over
   * field predicates applies to a single span.
   *
-  * Scale shape: each group is one filtered distinct-traceId projection
-  * (filter pushed to the scan); groups intersect on the traceId hash —
-  * no trace payload moves until the final fetch join.
+  * Scale shape: one scan and one aggregate on the traceId hash. Each
+  * group becomes a per-trace "some span matched" flag beside the
+  * summary columns (SpanOps.searchTraceSummaries), so the window is read
+  * once however many groups the tree has.
   */
 object TraceSearch {
 
@@ -33,10 +34,8 @@ object TraceSearch {
   }
 
   /** Trace ids satisfying every span-level group. */
-  def matchingTraceIds(spans: DataFrame, groups: Seq[Expr]): DataFrame = {
-    require(groups.nonEmpty, "expression-tree search needs at least one span-level group")
+  def matchingTraceIds(spans: DataFrame, groups: Seq[Expr]): DataFrame =
     SpanOps.searchTracesExpr(spans, groups.map(compile))
-  }
 
   /** Span-intrinsic numeric fields — range-indexed in every index doc
     * (the reference's TraceIndexDoc writes starttime/duration as
@@ -77,12 +76,8 @@ object TraceSearch {
     matchingTraceIds(WhitelistIndex.extractTags(spans, whitelist), groups)
   }
 
-  /** Full search: matching ids → fetch + summarize those traces,
-    * newest-first with a deterministic tie-break. */
+  /** Full search: the matching traces summarized, newest first with a
+    * deterministic tie-break, in the same single pass. */
   def search(spans: DataFrame, groups: Seq[Expr], limit: Int): DataFrame =
-    spans.join(matchingTraceIds(spans, groups), Seq("trace_id"), "left_semi")
-      .groupBy("trace_id")
-      .agg(min("start_us").as("trace_start_us"), count(lit(1)).as("span_count"))
-      .orderBy(col("trace_start_us").desc, col("trace_id"))
-      .limit(limit)
+    SpanOps.searchTraceSummaries(spans, groups.map(compile), limit)
 }

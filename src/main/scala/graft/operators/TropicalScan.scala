@@ -55,18 +55,21 @@ object TropicalScan {
     // below is ARITHMETIC (groupMax = ceil(groupMax/B) per round), so a
     // sparse idx would otherwise exit the loop with multiple unfolded
     // segments per key and silently emit several rows per key. Dense
-    // 0-based idx ⇒ per key min(idx) = 0 and max(idx) = n−1; violations
-    // fail loudly here instead. (Same single small job that derived
-    // groupMax before — the check rides the existing aggregate.)
+    // 0-based idx ⇒ per key n non-null, n distinct idx values with
+    // min(idx) = 0 and max(idx) = n−1; violations fail loudly here
+    // instead. (Same single small job that derived groupMax before —
+    // the check rides the existing aggregate.)
     val hd = seg.groupBy("key")
-      .agg(count(lit(1)).as("n"), min("idx").as("mn"), max("idx").as("mx"))
+      .agg(count(lit(1)).as("n"), count("idx").as("nn"), countDistinct("idx").as("nd"),
+        min("idx").as("mn"), max("idx").as("mx"))
       .agg(coalesce(max("n"), lit(0L)).as("gm"),
-        coalesce(max(when(col("mn") =!= 0L || col("mx") =!= col("n") - 1L, 1L)
+        coalesce(max(when(col("nn") =!= col("n") || col("nd") =!= col("n") ||
+          col("mn") =!= 0L || col("mx") =!= col("n") - 1L, 1L)
           .otherwise(0L)), lit(0L)).as("bad"))
       .head()
     require(hd.getLong(1) == 0L,
-      "viterbi2 requires a DENSE 0-based idx per key (min(idx)=0, max(idx)=count-1): " +
-        "a sparse idx would fold incompletely and emit multiple rows per key")
+      "viterbi2 requires a DENSE 0-based idx per key (non-null, distinct, min(idx)=0, " +
+        "max(idx)=count-1): a sparse idx would fold incompletely and emit multiple rows per key")
     var groupMax: Long = hd.getLong(0)
     var rounds = 0
     type M = (Column, Column, Column, Column)

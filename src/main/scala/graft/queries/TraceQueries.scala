@@ -222,7 +222,7 @@ object TraceQueries {
       cte("""SELECT * FROM spans WHERE trace_id IN ('7', '11', '13')
             |ORDER BY trace_id, span_id""".stripMargin)),
 
-    // A10: searchTraces — two-phase index lookup + trace fetch
+    // A10: searchTraces — the index lookup and the trace fetch in one pass
     "trace_search" -> QueryDef.sql(
       (s, dir) => SpanOps.searchTraces(spans(s, dir), "purchase", T0, T0 + 7 * DayUs, 10),
       cte(s"""SELECT trace_id, MIN(start_us) AS trace_start_us, COUNT(*) AS span_count
@@ -234,28 +234,15 @@ object TraceQueries {
 
     // A10b: searchTraces by whitelisted TAG field — the reference's
     // primary search path (field filters hit the ES index built from
-    // whitelist-extracted tags). Two-phase: typed tag predicate +
-    // time range find traceIds, semi join fetches + summarizes those
-    // traces. Runs over the config-extracted columns, so search and
-    // indexing share one whitelist definition.
+    // whitelist-extracted tags). The typed tag predicate + time range
+    // is one span-level group of the shared one-pass search, run over
+    // the config-extracted columns, so search and indexing share one
+    // whitelist definition.
     "trace_search_tags" -> QueryDef.sql(
-      (s, dir) => {
-        val extracted = WhitelistIndex.extractTags(richSpans(s, dir), demoWhitelist)
-        val matching = extracted
-          .filter(col("kval") > 90 && col("iserror") &&
-            col("start_us").between(T0, T0 + 14 * DayUs))
-          .select("trace_id").distinct()
-        // fetch+summarize needs only span columns — running it over the
-        // raw span relation (not the extracted frame) keeps the
-        // JSON-parse projection on the index-lookup side only, halving
-        // the per-row JSON work (the reference likewise fetches from
-        // the span store after the ES index lookup)
-        spans(s, dir).join(matching, Seq("trace_id"), "left_semi")
-          .groupBy("trace_id")
-          .agg(min("start_us").as("trace_start_us"), count(lit(1)).as("span_count"))
-          .orderBy(col("trace_start_us").desc, col("trace_id"))
-          .limit(10)
-      },
+      (s, dir) => SpanOps.searchTraceSummaries(
+        WhitelistIndex.extractTags(richSpans(s, dir), demoWhitelist),
+        Seq(col("kval") > 90 && col("iserror") && col("start_us").between(T0, T0 + 14 * DayUs)),
+        10),
       cte(s"""SELECT trace_id, MIN(start_us) AS trace_start_us, COUNT(*) AS span_count
              |FROM spans
              |WHERE trace_id IN (
@@ -342,7 +329,7 @@ object TraceQueries {
         |WHERE substr(md5(trace_id), 1, 1) = '0' OR trace_id IN ('0', '1', '2')
         |ORDER BY codec, trace_id, span_id""".stripMargin)),
 
-    // A11: expression-tree search — AND of span-level groups (intersect)
+    // A11: expression-tree search — AND of span-level groups
     "trace_search_expr" -> QueryDef.sql(
       (s, dir) => SpanOps.searchTracesExpr(spans(s, dir), Seq(
         col("service") === "purchase" && col("start_us").between(T0, T1),

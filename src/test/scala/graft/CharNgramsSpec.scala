@@ -43,6 +43,18 @@ class CharNgramsSpec extends AnyFunSpec with Matchers with SparkTestBase {
       plan should include("*(1) Project [char_ngrams")
     }
 
+    it("rejects a null or non-positive n at analysis, before any row runs") {
+      GraftExtensions.register(spark)
+      val docs = Tables.documents(spark, sfDir)
+      for (n <- Seq("0", "-2", "CAST(NULL AS INT)")) withClue(n) {
+        // selectExpr analyzes eagerly: no action, so no executor row
+        val ex = intercept[org.apache.spark.sql.AnalysisException] {
+          docs.selectExpr(s"char_ngrams(text, $n)")
+        }
+        ex.getMessage should include("n >= 1")
+      }
+    }
+
     it("rejects non-string input at analysis") {
       GraftExtensions.register(spark)
       assertThrows[Exception] {

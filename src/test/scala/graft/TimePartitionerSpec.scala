@@ -1,7 +1,12 @@
 package graft
 
-import graft.operators.{SpanOps, TimePartitioner}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import graft.operators.{SpanOps, TimePartitioner, TraceSearch}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
 import org.scalatest.funspec.AnyFunSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -9,6 +14,71 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
   private val T0 = 1704067200000000L // 2024-01-01 UTC micros
   private val DayUs = 86400000000L
+
+  private val Hour = 3600000000L
+  private val Minute = 60000000L
+
+  /** A span every 10 minutes for `hours` hours from `startUs`. */
+  private def everyTenMinutes(s: SparkSession, startUs: Long, hours: Int): DataFrame = {
+    import s.implicits._
+    (0 until hours * 6).map { i =>
+      (s"t${i % 7}", i.toLong, if (i % 3 == 0) "pay" else "web", s"op_${i % 2}", startUs + i * 10 * Minute, 1000L)
+    }.toDF("trace_id", "span_id", "service", "operation", "start_us", "duration_us")
+  }
+
+  private def written(spans: DataFrame, hourly: Boolean): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tp_window").toString
+    TimePartitioner.writePartitioned(spans, dir, hourly)
+    dir
+  }
+
+  /** readRange returns exactly the rows of [from, to], under the schema
+    * a whole-directory read infers; returns the partitions it scans. */
+  private def checkWindow(s: SparkSession, dir: String, spans: DataFrame, from: Long, to: Long): Int = {
+    val df = TimePartitioner.readRange(s, dir, from, to)
+    df.schema shouldBe s.read.parquet(dir).schema
+    def ids(d: DataFrame) = d.select("span_id").collect().map(_.getLong(0)).sorted.toSeq
+    ids(df) shouldBe ids(spans.filter(col("start_us").between(from, to)))
+    scanOf(df).selectedPartitions.partitionCount
+  }
+
+  private def scanOf(df: DataFrame): FileSourceScanExec =
+    df.queryExecution.executedPlan.collectLeaves().collectFirst { case f: FileSourceScanExec => f }.get
+
+  /** Every node of the physical plan, before adaptive execution. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+  }
+
+  /** Jobs Spark starts from this thread while `build` runs. A marker job
+    * after it flushes the listener: events reach it in order. */
+  private def jobsDuring(build: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-tp-build-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build")
+      build
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      marker.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   private lazy val outDir = {
     val dir = java.nio.file.Files.createTempDirectory("graft_tp_spec").toString
@@ -209,6 +279,72 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
         a should be < b
       }
       spark.read.parquet(dir).count() shouldBe beforeRows
+    }
+
+    it("reads a mid-hour window across a day boundary from its hr= leaves only") {
+      val spans = everyTenMinutes(spark, T0, 72)
+      val dir = written(spans, hourly = true)
+      // 22:35 on day 1 to 01:25 on day 2: leaves hr=22, 23, then 00, 01
+      checkWindow(spark, dir, spans, T0 + 22 * Hour + 35 * Minute, T0 + 25 * Hour + 25 * Minute) shouldBe 4
+      // window bounds are inclusive, on the hour as well
+      checkWindow(spark, dir, spans, T0 + 3 * Hour, T0 + 4 * Hour) shouldBe 2
+      // day 2 lies wholly inside: its dt= directory is read whole
+      checkWindow(spark, dir, spans, T0 + 20 * Hour, T0 + 50 * Hour + 5 * Minute) shouldBe 31
+    }
+
+    it("reads a window with no partitions as empty, without an exception") {
+      val spans = everyTenMinutes(spark, T0, 24)
+      val dir = written(spans, hourly = true)
+      TimePartitioner.readRange(spark, dir, T0 + 400 * DayUs, T0 + 401 * DayUs).count() shouldBe 0L
+      TimePartitioner.readRange(spark, dir, T0 - 2 * DayUs, T0 - DayUs).count() shouldBe 0L
+    }
+
+    it("reads the dt-only layout's day directories") {
+      val spans = everyTenMinutes(spark, T0, 72)
+      val dir = written(spans, hourly = false)
+      checkWindow(spark, dir, spans, T0 + 22 * Hour + 35 * Minute, T0 + 25 * Hour + 25 * Minute) shouldBe 2
+      checkWindow(spark, dir, spans, T0 + 30 * Hour, T0 + 31 * Hour) shouldBe 1
+    }
+
+    it("derives the hour leaves in a non-UTC session time zone, across a DST change") {
+      // 2024-11-03 06:00 UTC: New York falls back from EDT to EST, so its
+      // local hour 01 occurs twice; Kolkata is UTC+05:30
+      val dstUs = 1730613600000000L
+      for (zone <- Seq("America/New_York", "Asia/Kolkata")) withClue(zone) {
+        val s = spark.newSession()
+        s.conf.set("spark.sql.session.timeZone", zone)
+        val spans = everyTenMinutes(s, dstUs - 36 * Hour, 72)
+        val dir = written(spans, hourly = true)
+        // starts before local midnight (New York), ends past the change
+        val parts = checkWindow(s, dir, spans, dstUs - 2 * Hour - 25 * Minute, dstUs + 85 * Minute)
+        parts should be > 0
+        parts should be < 10
+      }
+    }
+
+    it("plans a search over readRange as one scan and one shuffle") {
+      val dir = written(everyTenMinutes(spark, T0, 72), hourly = true)
+      import TraceSearch._
+      val (from, to) = (T0 + 10 * Hour, T0 + 30 * Hour)
+      val searches = Seq(
+        SpanOps.searchTraces(TimePartitioner.readRange(spark, dir, from, to), "pay", from, to, 10),
+        TraceSearch.search(TimePartitioner.readRange(spark, dir, from, to),
+          Seq(Eq("service", "pay"), Or(Seq(Eq("operation", "op_1"), Not(Eq("service", "web"))))), 10))
+      for (df <- searches) {
+        val plan = nodes(df.queryExecution.executedPlan)
+        withClue(df.queryExecution.executedPlan) {
+          plan.count(_.isInstanceOf[FileSourceScanExec]) shouldBe 1
+          plan.count(_.isInstanceOf[ShuffleExchangeExec]) shouldBe 1
+        }
+        df.collect() should not be empty
+      }
+    }
+
+    it("builds its DataFrame without running a Spark job") {
+      val dir = written(everyTenMinutes(spark, T0, 48), hourly = true)
+      // the control: a whole-directory read infers its schema with a job
+      jobsDuring(spark.read.parquet(dir)) should be > 0
+      jobsDuring(TimePartitioner.readRange(spark, dir, T0 + 5 * Hour, T0 + 29 * Hour)) shouldBe 0
     }
   }
 }

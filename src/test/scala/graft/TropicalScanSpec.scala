@@ -61,5 +61,21 @@ class TropicalScanSpec extends AnyFunSpec with Matchers with SparkTestBase {
       out("a") shouldBe seqDp(a.map(_._3), a.map(_._4), 2L)
       out("b") shouldBe seqDp(b.map(_._3), b.map(_._4), 3L)
     }
+
+    it("rejects an idx that is not dense: a repeated value, an all-null idx") {
+      val s = spark
+      import s.implicits._
+      // {0,1,2,4,4} has min 0 and max count-1, so only the distinct
+      // count tells it from a dense idx
+      val repeated = Seq(0L, 1L, 2L, 4L, 4L).map(i => ("a", Option(i), 1L, 2L, 3L))
+      val allNull = (0 until 3).map(_ => ("b", Option.empty[Long], 1L, 2L, 3L))
+      for ((name, rows) <- Seq("repeated" -> repeated, "all-null" -> allNull)) withClue(name) {
+        val ex = intercept[IllegalArgumentException] {
+          TropicalScan.viterbi2(rows.toDF("k", "idx", "e0", "e1", "t"),
+            "k", "idx", "e0", "e1", col("t"))
+        }
+        ex.getMessage should include("DENSE")
+      }
+    }
   }
 }
