@@ -3,6 +3,7 @@ package graft
 import graft.functions.{ArrDot, ArrDotL, ArrL2Sq, CharNgrams, FnvHash64, JsonTagsMap, LshBandKeys, LshBandKeysLin, MinHashSig, PackBlob, SimHash48, UnpackBlob, WinnowFps}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers graft's native
   * expressions into the session's function registry.
@@ -14,75 +15,32 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("fnv_hash64"), FnvHash64.info, exprs => FnvHash64(exprs.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("simhash48"), SimHash48.info, exprs => SimHash48(exprs.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("minhash_sig"), MinHashSig.info,
-        exprs => MinHashSig(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("json_tags_map"), JsonTagsMap.info, exprs => JsonTagsMap(exprs.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("lsh_band_keys"), LshBandKeys.info,
-        exprs => LshBandKeys(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction(
-      (FunctionIdentifier("lsh_band_keys_lin"), LshBandKeysLin.info,
-        exprs => LshBandKeysLin(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction(
-      (FunctionIdentifier("arr_dot"), ArrDot.info, exprs => ArrDot(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("arr_l2sq"), ArrL2Sq.info, exprs => ArrL2Sq(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("arr_dotl"), ArrDotL.info, exprs => ArrDotL(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("pack_blob"), PackBlob.info,
-        exprs => PackBlob(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("unpack_blob"), UnpackBlob.info, exprs => UnpackBlob(exprs.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("winnow_fps"), WinnowFps.info,
-        exprs => WinnowFps(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction(
-      (FunctionIdentifier("char_ngrams"), CharNgrams.info,
-        exprs => CharNgrams(exprs(0), exprs(1))))
+    GraftExtensions.functions.foreach { case (name, info, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    }
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
   }
 }
 
 object GraftExtensions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("fnv_hash64"), FnvHash64.info, exprs => FnvHash64(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash48"), SimHash48.info, exprs => SimHash48(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sig"), MinHashSig.info,
-      exprs => MinHashSig(exprs(0), exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("json_tags_map"), JsonTagsMap.info, exprs => JsonTagsMap(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("lsh_band_keys"), LshBandKeys.info,
-      exprs => LshBandKeys(exprs(0), exprs(1), exprs(2)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("lsh_band_keys_lin"), LshBandKeysLin.info,
-      exprs => LshBandKeysLin(exprs(0), exprs(1), exprs(2)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("arr_dot"), ArrDot.info, exprs => ArrDot(exprs(0), exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("arr_l2sq"), ArrL2Sq.info, exprs => ArrL2Sq(exprs(0), exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("arr_dotl"), ArrDotL.info, exprs => ArrDotL(exprs(0), exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("pack_blob"), PackBlob.info,
-      exprs => PackBlob(exprs(0), exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("unpack_blob"), UnpackBlob.info, exprs => UnpackBlob(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("winnow_fps"), WinnowFps.info,
-      exprs => WinnowFps(exprs(0), exprs(1), exprs(2)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("char_ngrams"), CharNgrams.info,
-      exprs => CharNgrams(exprs(0), exprs(1)))
-  }
+  /** Every native function: (SQL name, info, builder). */
+  private val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    ("fnv_hash64", FnvHash64.info, e => FnvHash64(e.head)),
+    ("simhash48", SimHash48.info, e => SimHash48(e.head)),
+    ("minhash_sig", MinHashSig.info, e => MinHashSig(e(0), e(1))),
+    ("json_tags_map", JsonTagsMap.info, e => JsonTagsMap(e.head)),
+    ("lsh_band_keys", LshBandKeys.info, e => LshBandKeys(e(0), e(1), e(2))),
+    ("lsh_band_keys_lin", LshBandKeysLin.info, e => LshBandKeysLin(e(0), e(1), e(2))),
+    ("arr_dot", ArrDot.info, e => ArrDot(e(0), e(1))),
+    ("arr_l2sq", ArrL2Sq.info, e => ArrL2Sq(e(0), e(1))),
+    ("arr_dotl", ArrDotL.info, e => ArrDotL(e(0), e(1))),
+    ("pack_blob", PackBlob.info, e => PackBlob(e(0), e(1))),
+    ("unpack_blob", UnpackBlob.info, e => UnpackBlob(e.head)),
+    ("winnow_fps", WinnowFps.info, e => WinnowFps(e(0), e(1), e(2))),
+    ("char_ngrams", CharNgrams.info, e => CharNgrams(e(0), e(1))))
+
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(FunctionIdentifier(name), info, builder)
+    }
 }

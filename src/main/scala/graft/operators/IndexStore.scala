@@ -44,27 +44,15 @@ object IndexStore {
   private def buckets: Int =
     sys.env.getOrElse("GRAFT_INDEX_BUCKETS", "32").toInt
 
-  /** Default root is PER-PROCESS (fresh temp dir): within one JVM the
-    * build-once/probe-many split holds — build in warmup or as its own
-    * timed surface, every probe reads the bucketed files — but nothing
-    * survives the process, so every bench/verify invocation provably
-    * computes from the parquet inputs alone (no cross-run result
-    * caching). A production deployment sets GRAFT_INDEX_DIR to durable
-    * storage and gets the true build-once amortization. */
-  private lazy val processRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-index").toFile
-    // best-effort cleanup at JVM exit (r13 advice): without it every
-    // bench/verify/test JVM leaked a graft-index* directory of parquet
-    // index data into the system temp dir
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      try rm(d) catch { case _: Throwable => () }
-    }, "graft-index-cleanup"))
-    d.getAbsolutePath
-  }
+  /** Default root is PER-PROCESS (a [[graft.Scratch]] directory, gone
+    * when the JVM exits): within one JVM the build-once/probe-many split
+    * holds — build in warmup or as its own timed surface, every probe
+    * reads the bucketed files — but nothing survives the process, so
+    * every bench/verify invocation provably computes from the parquet
+    * inputs alone (no cross-run result caching). A production deployment
+    * sets GRAFT_INDEX_DIR to durable storage and gets the true
+    * build-once amortization. */
+  private lazy val processRoot: String = graft.Scratch.fresh("graft-index")
   private[graft] def rootDir: String =
     sys.env.getOrElse("GRAFT_INDEX_DIR", processRoot)
 

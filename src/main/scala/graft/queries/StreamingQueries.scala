@@ -1,12 +1,14 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.streaming.SpanBufferStream
 import graft.trace.TraceDataset
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming coverage (SURVEY.md §2 A3): the indexer's accumulate-and-
   * seal loop as real Structured Streaming jobs over the events parquet,
@@ -46,43 +48,37 @@ object StreamingQueries {
     val rows = Tables.events(ss, dir).count()
     val parts = math.min(32L, math.max(8L, rows / 250000L))
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // Pluggable state store: SPARK_GRAFT_STATE_STORE=rocksdb swaps the
-    // default HDFS-backed (on-heap) provider for RocksDB (off-heap,
-    // spill-to-disk) — the knob a 100 M-event session store turns when
-    // executor heap is the binding constraint. Default stays
-    // HDFS-backed: at the bench image's heap sizes it measured faster
-    // (see BASELINE.md state-store note); RocksDbStateStoreSpec pins
-    // result-equivalence so flipping the knob is a pure perf decision.
-    if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb"))
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     ss
   }
 
-  /** File-source span stream over the events table (schema borrowed
-    * from the batch read, so [[Tables.eventTimeUs]]'s dtype dispatch
-    * sees whatever encoding the file actually has). */
-  private def spanStream(ss: SparkSession, dir: String, richOps: Boolean): Dataset[graft.model.Span] = {
-    val batchSchema = Tables.events(ss, dir).schema
-    // the driver testdata ships events as a single FILE $dir/events.parquet
-    // (stream $dir with a filename glob); Spark-written layouts (e.g. the
-    // ScaleUp-derived sf1) make it a DIRECTORY of part files (stream the
-    // directory itself — the glob would match no leaf file and silently
-    // produce an EMPTY stream)
-    val eventsPath = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val isDir = eventsPath.getFileSystem(ss.sparkContext.hadoopConfiguration)
-      .getFileStatus(eventsPath).isDirectory
+  /** File stream over `<dir>/<table>.parquet`, under the schema of
+    * `batch` — that table's batch read — so dtype dispatch such as
+    * [[Tables.eventTimeUs]]'s sees whatever encoding the file has. The
+    * driver testdata ships each table as a single FILE (stream `dir`
+    * with a filename glob); Spark-written layouts (e.g. the
+    * ScaleUp-derived sf1) make it a DIRECTORY of part files (stream the
+    * directory itself — the glob would match no leaf file and silently
+    * produce an EMPTY stream). */
+  private def tableStream(batch: DataFrame, dir: String, table: String): DataFrame = {
+    val ss = batch.sparkSession
+    val path = new Path(s"$dir/$table.parquet")
+    val isDir = path.getFileSystem(ss.sparkContext.hadoopConfiguration)
+      .getFileStatus(path).isDirectory
     // Every oracle in this file encodes the single-data-batch replay
     // model (see object doc). Pin it mechanically: with the file cap at
     // Int.MaxValue, AvailableNow cannot split a multi-file backlog into
     // several batches (which would advance the watermark mid-replay and
     // silently drop late rows). awaitSingleDataBatch() then ASSERTS the
     // model held.
-    val reader = ss.readStream.schema(batchSchema)
+    val reader = ss.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", Int.MaxValue.toString)
-    val eventsStream =
-      if (isDir) reader.parquet(eventsPath.toString)
-      else reader.option("pathGlobFilter", "events.parquet").parquet(dir)
+    if (isDir) reader.parquet(path.toString)
+    else reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
+  }
+
+  /** File-source span stream over the events table. */
+  private def spanStream(ss: SparkSession, dir: String, richOps: Boolean): Dataset[graft.model.Span] = {
+    val eventsStream = tableStream(Tables.events(ss, dir), dir, "events")
     // at ingest time parents are unknown (the reference's indexer also
     // sees bare spans) — no lag window here, streams can't sort history
     TraceDataset.toSpanDataset(eventsStream.select(
@@ -105,7 +101,7 @@ object StreamingQueries {
     * input rows (trailing no-data watermark batches don't count). A
     * split backlog would make the hash mismatch with no hint why —
     * fail here with the cause named instead. */
-  private def awaitSingleDataBatch(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def awaitSingleDataBatch(q: StreamingQuery): Unit = {
     q.awaitTermination()
     val dataBatches = q.recentProgress.count(_.numInputRows > 0)
     require(dataBatches <= 1,
@@ -113,14 +109,19 @@ object StreamingQueries {
         "data batches — the source split the files (check maxFilesPerTrigger)")
   }
 
-  /** Copy a (small) memory-sink result out of the CLONED session and
+  /** Run a COMPLETE-mode stream (tiny output by contract) into a
+    * memory sink, then copy the result out of the CLONED session and
     * DROP the sink table — leaked sinks accumulate in driver memory
     * across bench/verify runs and slow every later query. The copy is
     * rebuilt on the CALLER's session so downstream use doesn't depend
-    * on the clone. Only for COMPLETE-mode outputs (tiny by contract);
-    * append-mode streams go through [[runToParquet]] — never the
-    * driver. */
-  private def drainSink(caller: SparkSession, ss: SparkSession, sink: String): DataFrame = {
+    * on the clone. Append-mode streams go through [[runToParquet]] —
+    * never the driver. */
+  private def runToMemory(caller: SparkSession, df: DataFrame, name: String): DataFrame = {
+    val sink = s"${name}_${System.nanoTime()}"
+    val q = df.writeStream.format("memory").queryName(sink)
+      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+    awaitSingleDataBatch(q)
+    val ss = df.sparkSession
     val out = ss.table(sink)
     val materialized = caller.createDataFrame(
       new java.util.ArrayList(java.util.Arrays.asList(out.collect(): _*)), out.schema)
@@ -133,23 +134,50 @@ object StreamingQueries {
     * touches the driver (a memory sink collected the 10M-row sf10
     * session set twice; executors write files in parallel instead,
     * exactly how a production job would land this). Fresh run-unique
-    * temp dir per call; the read-back uses the sink's _spark_metadata
+    * scratch dir per call; the read-back uses the sink's _spark_metadata
     * commit log, so partial files from a dying query can't leak into
-    * the result. */
-  private def runToParquet(caller: SparkSession, df: DataFrame, name: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(s"graft_stream_$name").toString
+    * the result. `await` checks the replay model the caller's oracle
+    * assumes. */
+  private def runToParquet(caller: SparkSession, df: DataFrame, name: String,
+      await: StreamingQuery => Unit = awaitSingleDataBatch): DataFrame = {
+    val base = Scratch.fresh(s"graft_stream_$name")
     val q = df.writeStream.format("parquet")
       .option("path", s"$base/out")
       .option("checkpointLocation", s"$base/ckpt")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    awaitSingleDataBatch(q)
-    // A stream that commits zero batches never creates the sink path —
-    // mirror the old memory-sink behavior and hand back an empty table
-    // with the stream's schema instead of an AnalysisException.
-    val outPath = new org.apache.hadoop.fs.Path(s"$base/out")
-    val fs = outPath.getFileSystem(caller.sparkContext.hadoopConfiguration)
-    if (fs.exists(outPath)) caller.read.parquet(s"$base/out")
-    else caller.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
+    await(q)
+    readOrEmpty(caller, s"$base/out", df.schema)
+  }
+
+  /** Run `stream` to completion, appending `perBatch` of every
+    * micro-batch to one parquet table — batch logic per micro-batch,
+    * for results that are not incrementally maintainable — and read it
+    * back on the caller's session. With nothing landed the result is
+    * empty with `perBatch`'s output schema (applied to an empty frame
+    * of the stream schema: analysis only, no job). */
+  private[graft] def runForeachBatch(caller: SparkSession, stream: DataFrame, name: String)(
+      perBatch: DataFrame => DataFrame): DataFrame = {
+    val base = Scratch.fresh(s"graft_stream_$name")
+    val q = stream.writeStream
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        perBatch(batch).write.mode("append").parquet(s"$base/out")
+        ()
+      }
+      .start()
+    q.awaitTermination()
+    readOrEmpty(caller, s"$base/out", perBatch(stream.sparkSession.createDataFrame(
+      new java.util.ArrayList[Row](), stream.schema)).schema)
+  }
+
+  /** The parquet table a stream landed at `out`. A stream that commits
+    * zero batches never creates that path: hand back an empty table
+    * with `schema` instead of an AnalysisException. */
+  private def readOrEmpty(caller: SparkSession, out: String, schema: => StructType): DataFrame = {
+    val p = new Path(out)
+    if (p.getFileSystem(caller.sparkContext.hadoopConfiguration).exists(p)) caller.read.parquet(out)
+    else caller.createDataFrame(new java.util.ArrayList[Row](), schema)
   }
 
   /** A3: flatMapGroupsWithState accumulate-and-seal, summarized as
@@ -246,10 +274,6 @@ object StreamingQueries {
       .orderBy("window_start_us", "service")
   }
 
-  /** Streaming exact dedup over a doubled backlog (the at-least-once
-    * redelivery case): every span arrives twice, the watermarked
-    * dropDuplicates must emit each exactly once — the per-service
-    * counts then equal the batch DISTINCT, which is the oracle. */
   /** Streaming leaderboard: watermark-evicted per-(window, service)
     * counts land in the parquet sink; the top-3 rank runs as a batch
     * read over the landed windows — rank is not incrementally
@@ -312,17 +336,16 @@ object StreamingQueries {
       .orderBy("service", "window_start_us")
   }
 
+  /** Streaming exact dedup over a doubled backlog (the at-least-once
+    * redelivery case): every span arrives twice, the watermarked
+    * dropDuplicates must emit each exactly once — the per-service
+    * counts then equal the batch DISTINCT, which is the oracle. */
   private def runDedup(s: SparkSession, dir: String): DataFrame = {
     val ss = isolated(s, dir)
     val spans = spanStream(ss, dir, richOps = false)
     val doubled = spans.union(spans)
-    val sink = s"dedup_spans_${System.nanoTime()}"
-    val q = SpanBufferStream.dedupSpans(doubled, gapSeconds = GapSeconds)
-      .groupBy("service").count()
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    awaitSingleDataBatch(q)
-    drainSink(s, ss, sink).orderBy("service")
+    runToMemory(s, SpanBufferStream.dedupSpans(doubled, gapSeconds = GapSeconds)
+      .groupBy("service").count(), "dedup_spans").orderBy("service")
   }
 
   /** Stream-stream inner join with event-time bounds: each error span
@@ -409,11 +432,7 @@ object StreamingQueries {
       .select(col("service"),
         (col("durationUs") <= col("slo_us")).cast("string").as("within_slo"))
       .groupBy("service", "within_slo").agg(count(lit(1)).as("n"))
-    val sink = s"stream_enrich_${System.nanoTime()}"
-    val q = enriched.writeStream.format("memory").queryName(sink)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    awaitSingleDataBatch(q)
-    drainSink(s, ss, sink).orderBy("service", "within_slo")
+    runToMemory(s, enriched, "stream_enrich").orderBy("service", "within_slo")
   }
 
   /** Watermark LATE-DATA accounting — the one semantics the
@@ -437,90 +456,43 @@ object StreamingQueries {
     * Scale: the slice write is distributed (one coalesced file per
     * batch — linear, executor-side); only filesystem renames touch the
     * driver. One layout per (JVM, sf dir), like richSpans. */
-  private val lateLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private val LateBatches = 4
 
-  private def lateDropsLayout(ss: SparkSession, dir: String): String = {
-    val ev = Tables.events(ss, dir)
-    lateLayouts.computeIfAbsent(dir, { _ =>
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_late").toString
-      val slim = ev.select(col("event_id"),
-        Tables.eventTimeUs(ev).as("start_us"),
-        col("event_type").as("service"))
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(ss.sparkContext.hadoopConfiguration)
-      // slice by event_id MOD (not div): ids correlate ~1.0 with
-      // event time, so contiguous ranges would replay in time order
-      // and nothing would ever be late — interleaved slices make
-      // every batch span the whole timeline, so batches 1..3 are
-      // ~75% late against the watermark batch 0's max time set.
-      // ONE pass writes all four slices: repartition on the slice key
-      // puts each batch's rows in exactly one task, so partitionBy
-      // yields one file per batch dir (4 sequential coalesce(1)
-      // writes measured 26.6 s at sf10 — 4 full scans each funneled
-      // through a single task)
-      slim.withColumn("b", col("event_id") % LateBatches)
+  /** [[LateBatches]] MOD-interleaved single-file slices of `slim`
+    * (sliced on `key` MOD LateBatches), written once per (JVM, sf dir)
+    * under `prefix`, streamed back one file per micro-batch under the
+    * schema `slim` was written with. */
+  private def slicedStream(slim: DataFrame, dir: String, prefix: String, key: String): DataFrame = {
+    val ss = slim.sparkSession
+    val root = Scratch.once(prefix, dir) { root =>
+      val fs = new Path(root).getFileSystem(ss.sparkContext.hadoopConfiguration)
+      // slice by MOD (not div): ids correlate ~1.0 with event time, so
+      // contiguous ranges would replay in time order and nothing would
+      // ever be late — interleaved slices make every batch span the
+      // whole timeline, so batches 1..3 are ~75% late against the
+      // watermark batch 0's max time set.
+      // ONE pass writes all slices: repartition on the slice key puts
+      // each batch's rows in exactly one task, so partitionBy yields
+      // one file per batch dir (4 sequential coalesce(1) writes
+      // measured 26.6 s at sf10 — 4 full scans each funneled through a
+      // single task)
+      slim.withColumn("b", col(key) % LateBatches)
         .repartition(LateBatches, col("b"))
         .write.mode("overwrite").partitionBy("b").parquet(s"$root/sliced")
       (0 until LateBatches).foreach { k =>
-        val part = s"$root/sliced/b=$k"
-        val file = fs.globStatus(new org.apache.hadoop.fs.Path(s"$part/part-*.parquet"))(0).getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$root/in/batch$k.parquet")
+        val file = fs.globStatus(new Path(s"$root/sliced/b=$k/part-*.parquet"))(0).getPath
+        val dst = new Path(s"$root/in/batch$k.parquet")
         fs.mkdirs(dst.getParent)
         fs.rename(file, dst)
         // strictly increasing mtimes pin the replay order (the file
         // source processes oldest-first)
         fs.setTimes(dst, 1000000L + k * 10000L, -1)
       }
-      root
-    })
+    }
+    ss.readStream.schema(slim.schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$root/in")
   }
 
-  private val upsertLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** 4 MOD-interleaved single-file slices of the span relation for the
-    * streaming-upsert replay — same machinery as [[lateDropsLayout]]
-    * (one partitioned write, strictly increasing mtimes), but keyed so
-    * LATER batches routinely carry EARLIER versions of a key: the
-    * merge rule (max version), not arrival order, must decide. */
-  private def upsertLayout(ss: SparkSession, dir: String): String = {
-    val ev = Tables.events(ss, dir)
-    upsertLayouts.computeIfAbsent(dir, { _ =>
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_upsert").toString
-      val slim = ev.select(col("user_id").cast("string").as("trace_id"),
-        col("event_id").as("span_id"),
-        col("event_type").as("service"),
-        Tables.eventTimeUs(ev).as("start_us"),
-        expr("CAST(ROUND(value * 1000, 0) AS BIGINT)").as("duration_us"))
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(ss.sparkContext.hadoopConfiguration)
-      slim.withColumn("b", col("span_id") % LateBatches)
-        .repartition(LateBatches, col("b"))
-        .write.mode("overwrite").partitionBy("b").parquet(s"$root/sliced")
-      (0 until LateBatches).foreach { k =>
-        val part = s"$root/sliced/b=$k"
-        val file = fs.globStatus(new org.apache.hadoop.fs.Path(s"$part/part-*.parquet"))(0).getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$root/in/batch$k.parquet")
-        fs.mkdirs(dst.getParent)
-        fs.rename(file, dst)
-        fs.setTimes(dst, 1000000L + k * 10000L, -1)
-      }
-      root
-    })
-  }
-
-  /** Streaming CDC keep-latest upsert (the streaming twin of
-    * trace_upsert): each micro-batch MERGES into a versioned parquet
-    * state table in foreachBatch — batch-reduce to its own latest per
-    * key, union with the previous state, keep the global latest by
-    * (start_us, span_id) desc. Because the winner is the maximal
-    * VERSION (never the latest ARRIVAL), the final state is a pure
-    * function of the data for any batch partitioning — which is what
-    * lets a plain batch oracle hash-check a 4-batch replay where
-    * every batch interleaves old and new versions of most keys. */
   /** C124 as a stream: per-user journey credits emit on the watermark
     * seal; the landed per-user channel rows batch-aggregate to the
     * final per-channel report (exact-integer credits make that sum
@@ -539,25 +511,35 @@ object StreamingQueries {
       .orderBy("channel")
   }
 
+  /** Streaming CDC keep-latest upsert (the streaming twin of
+    * trace_upsert): each micro-batch MERGES into a versioned parquet
+    * state table in foreachBatch — batch-reduce to its own latest per
+    * key, union with the previous state, keep the global latest by
+    * (start_us, span_id) desc. Because the winner is the maximal
+    * VERSION (never the latest ARRIVAL), the final state is a pure
+    * function of the data for any batch partitioning — which is what
+    * lets a plain batch oracle hash-check a 4-batch replay where
+    * every batch interleaves old and new versions of most keys. */
   private def runUpsert(s: SparkSession, dir: String): DataFrame = {
     val ss = isolated(s, dir)
-    val base = upsertLayout(ss, dir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("trace_id", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("span_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("service", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("start_us", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("duration_us", org.apache.spark.sql.types.LongType)))
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val stateBase = java.nio.file.Files.createTempDirectory("graft_stream_upsert_state").toString
+    val ev = Tables.events(ss, dir)
+    // sliced on span_id like the late-drop replay, so LATER batches
+    // routinely carry EARLIER versions of a key: the merge rule (max
+    // version), not arrival order, must decide
+    val stream = slicedStream(ev.select(col("user_id").cast("string").as("trace_id"),
+        col("event_id").as("span_id"),
+        col("event_type").as("service"),
+        Tables.eventTimeUs(ev).as("start_us"),
+        expr("CAST(ROUND(value * 1000, 0) AS BIGINT)").as("duration_us")),
+      dir, "graft_stream_upsert", key = "span_id")
+    val stateBase = Scratch.fresh("graft_stream_upsert_state")
     val w = Window.partitionBy("trace_id", "service")
       .orderBy(col("start_us").desc, col("span_id").desc)
     val version = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = stream.writeStream
       .option("checkpointLocation", s"$stateBase/ckpt")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val reduced = batch
           .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
         val v = version.get()
@@ -579,29 +561,23 @@ object StreamingQueries {
 
   private def runLateDrops(s: SparkSession, dir: String): DataFrame = {
     val ss = isolated(s, dir)
-    val base = lateDropsLayout(ss, dir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("start_us", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("service", org.apache.spark.sql.types.StringType)))
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val windowed = stream
+    val ev = Tables.events(ss, dir)
+    val windowed = slicedStream(ev.select(col("event_id"),
+        Tables.eventTimeUs(ev).as("start_us"),
+        col("event_type").as("service")),
+      dir, "graft_stream_late", key = "event_id")
       .withColumn("event_time", timestamp_micros(col("start_us")))
       .withWatermark("event_time", s"$GapSeconds seconds")
       .groupBy(window(col("event_time"), s"$GapSeconds seconds"), col("service"))
       .agg(count(lit(1)).as("n_spans"))
       .select(unix_micros(col("window.start")).as("window_start_us"),
         col("service"), col("n_spans"))
-    val out = java.nio.file.Files.createTempDirectory("graft_stream_late_out").toString
-    val q = windowed.writeStream.format("parquet")
-      .option("path", s"$out/out").option("checkpointLocation", s"$out/ckpt")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches == LateBatches,
-      s"late-drop oracle model requires $LateBatches data batches, saw $dataBatches")
-    s.read.parquet(s"$out/out").orderBy("window_start_us", "service")
+    runToParquet(s, windowed, "late_out", await = { q =>
+      q.awaitTermination()
+      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      require(dataBatches == LateBatches,
+        s"late-drop oracle model requires $LateBatches data batches, saw $dataBatches")
+    }).orderBy("window_start_us", "service")
   }
 
   // Shared oracle scaffolding: the same span timeline DuckDB-side.
@@ -944,10 +920,6 @@ object StreamingQueries {
         |  ORDER BY start_us DESC, span_id DESC) = 1
         |ORDER BY trace_id, service""".stripMargin))
 
-  /** Stream-static incremental dedup: see the defs entry. The result
-    * lands in a parquet FILE sink (never memory — a large snapshot's
-    * matches would collect to the driver) and is read back for the
-    * caller. */
   /** Streaming twin of corpus_quality_ensemble: static 1-row
     * calibration (localCheckpointed — computed once, not per batch),
     * file-stream replay of the documents corpus, per-micro-batch
@@ -958,62 +930,23 @@ object StreamingQueries {
     val docs = Tables.documents(ss, dir)
     val mm = TextQueries.qualityEnsembleCalibration(
       TextQueries.qualityEnsembleSignals(docs)).localCheckpoint()
-    val docsPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val isDir = docsPath.getFileSystem(ss.sparkContext.hadoopConfiguration)
-      .getFileStatus(docsPath).isDirectory
-    val reader = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", Int.MaxValue.toString)
-    val stream =
-      if (isDir) reader.parquet(docsPath.toString)
-      else reader.option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_qens").toString
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        TextQueries.qualityEnsembleApply(
-            TextQueries.qualityEnsembleSignals(batch), mm)
-          .write.mode("append").parquet(s"$base/out")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    val outPath = new org.apache.hadoop.fs.Path(s"$base/out")
-    val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(outPath)) s.read.parquet(s"$base/out").orderBy("doc_id")
-    else s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq()))
+    runForeachBatch(s, tableStream(docs, dir, "documents"), "qens") { batch =>
+      TextQueries.qualityEnsembleApply(TextQueries.qualityEnsembleSignals(batch), mm)
+    }.orderBy("doc_id")
   }
 
+  /** Stream-static incremental dedup: see the defs entry. The result
+    * lands in a parquet FILE sink (never memory — a large snapshot's
+    * matches would collect to the driver) and is read back for the
+    * caller. */
   private def runIncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val ss = isolated(s, dir)
-    val docs = Tables.documents(ss, dir)
     // r13: consume the persisted build-once index (IndexStore) — the
     // streaming twin amortizes the same build as the batch surface
     val (oldFp, stop) = graft.operators.IndexStore.winnowIndex(ss, dir)
-    val docsPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val isDir = docsPath.getFileSystem(ss.sparkContext.hadoopConfiguration)
-      .getFileStatus(docsPath).isDirectory
-    val reader = ss.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", Int.MaxValue.toString)
-    val newStream = TextQueries.mutatedTenth(
-      if (isDir) reader.parquet(docsPath.toString)
-      else reader.option("pathGlobFilter", "documents.parquet").parquet(dir))
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_incr").toString
-    val q = newStream.writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        TextQueries.incrementalProbe(oldFp, stop, batch)
-          .write.mode("append").parquet(s"$base/out")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    val outPath = new org.apache.hadoop.fs.Path(s"$base/out")
-    val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(outPath)) s.read.parquet(s"$base/out").orderBy("new_id")
-    else s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq()))
+    val newStream = TextQueries.mutatedTenth(tableStream(Tables.documents(ss, dir), dir, "documents"))
+    runForeachBatch(s, newStream, "incr") { batch =>
+      TextQueries.incrementalProbe(oldFp, stop, batch)
+    }.orderBy("new_id")
   }
 }

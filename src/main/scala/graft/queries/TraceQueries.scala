@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.operators.{ShardedWindow, SpanOps, TimePartitioner, TraceSearch, WhitelistIndex}
 import graft.operators.WhitelistIndex.WhitelistField
 import graft.trace.TraceDataset
@@ -29,21 +29,6 @@ object TraceQueries {
     * bound keeps the window COUNT constant as derived packs grow the
     * probe side. TestdataContractSpec pins the dense-id assumption. */
   private val WindowWorkloadMaxId = 100000L
-
-  /** One partitioned-layout write per (JVM, sf dir) — see
-    * trace_partitioned_scan. */
-  private val partitionedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** One z-ordered-layout write per (JVM, sf dir) — see
-    * trace_zorder_scan. */
-  private val zorderLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** One materialized (service, operation) catalog per (JVM, sf dir) —
-    * see trace_field_values_meta. */
-  private val serviceCatalogs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def spans(s: SparkSession, dir: String): DataFrame =
     SpanOps.spansFromEvents(Tables.events(s, dir))
@@ -75,13 +60,15 @@ object TraceQueries {
     * 136 s of trace_field_names' sf100 entry was to_json, not the
     * presence scan). Queries over richSpans now time what they claim:
     * JSON extraction/search over a stored span relation. */
-  private val richSpanStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** One JSON-lines copy of events per (JVM, sf dir) — see
-    * trace_span_ingest_json. */
-  private val jsonEventStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def richSpans(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Scratch.once("graft_rich_spans_", dir) { d =>
+      spans(s, dir).withColumn("tags", to_json(struct(
+        get_json_object(col("tags"), "$.k").cast("int").as("k"),
+        (col("service") === "error").as("err"),
+        (col("duration_us") / 1000.0).as("score"),
+        upper(substring(col("service"), 1, 3)).as("region"))))
+        .write.mode("overwrite").parquet(d)
+    })
 
   /** Spark's default JSON timestamp pattern is millisecond-precision —
     * a silent 1000× granularity loss on micros data — so the wire
@@ -90,28 +77,12 @@ object TraceQueries {
     "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
     "timestampNTZFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
 
-  private def jsonEvents(s: SparkSession, dir: String): DataFrame = {
-    val outDir = jsonEventStores.computeIfAbsent(dir, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_json_events_").toString
+  /** One JSON-lines copy of events per (JVM, sf dir) — see
+    * trace_span_ingest_json. */
+  private def jsonEvents(s: SparkSession, dir: String): DataFrame =
+    s.read.text(Scratch.once("graft_json_events_", dir) { d =>
       Tables.events(s, dir).write.mode("overwrite").options(JsonTsOptions).json(d)
-      d
     })
-    s.read.text(outDir)
-  }
-
-  private def richSpans(s: SparkSession, dir: String): DataFrame = {
-    val outDir = richSpanStores.computeIfAbsent(dir, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_rich_spans_").toString
-      spans(s, dir).withColumn("tags", to_json(struct(
-        get_json_object(col("tags"), "$.k").cast("int").as("k"),
-        (col("service") === "error").as("err"),
-        (col("duration_us") / 1000.0).as("score"),
-        upper(substring(col("service"), 1, 3)).as("region"))))
-        .write.mode("overwrite").parquet(d)
-      d
-    })
-    s.read.parquet(outDir)
-  }
 
   val defs: Map[String, QueryDef] = Map(
     // A1: span ingest/deserialize — typed projection of the raw stream
@@ -384,11 +355,9 @@ object TraceQueries {
     // pruned READ, not the setup write.
     "trace_partitioned_scan" -> QueryDef.sql(
       (s, dir) => {
-        val outDir = partitionedLayouts.computeIfAbsent(dir, _ => {
-          val d = java.nio.file.Files.createTempDirectory("graft_partitioned_spans_").toString
+        val outDir = Scratch.once("graft_partitioned_spans_", dir) { d =>
           TimePartitioner.writePartitioned(spans(s, dir), d, hourly = false)
-          d
-        })
+        }
         TimePartitioner.readRange(s, outDir, T0, T0 + 3 * DayUs)
           .groupBy("service").agg(count(lit(1)).as("n_spans"))
           .orderBy("service")
@@ -407,14 +376,12 @@ object TraceQueries {
     // which is exactly what the oracle checks.
     "trace_zorder_scan" -> QueryDef.sql(
       (s, dir) => {
-        val outDir = zorderLayouts.computeIfAbsent(dir, _ => {
-          val d = java.nio.file.Files.createTempDirectory("graft_zorder_spans_").toString
+        val outDir = Scratch.once("graft_zorder_spans_", dir) { d =>
           graft.operators.ZOrderLayout.writeZOrdered(
             spans(s, dir).select(col("trace_id").cast("long").as("trace_key"),
               col("span_id"), col("service"), col("start_us")),
             d, "trace_key", "start_us", nFiles = 16)
-          d
-        })
+        }
         s.read.parquet(outDir)
           .filter(col("trace_key").between(0, 4) &&
             col("start_us").between(T0, T0 + 3 * DayUs))
@@ -767,14 +734,13 @@ object TraceQueries {
     // the span-scanning trace_field_values by construction.
     "trace_field_values_meta" -> QueryDef.sql(
       (s, dir) => {
-        val outDir = serviceCatalogs.computeIfAbsent(dir, _ => {
-          val d = java.nio.file.Files.createTempDirectory("graft_svc_catalog_").toString
-          SpanOps.serviceOperationCatalog(spans(s, dir))
-            .coalesce(1).write.mode("overwrite").parquet(d)
-          d
-        })
+        val catalog = SpanOps.serviceOperationCatalog(spans(s, dir))
+        val outDir = Scratch.once("graft_svc_catalog_", dir) { d =>
+          catalog.coalesce(1).write.mode("overwrite").parquet(d)
+        }
+        // under the written frame's schema: no footer-inference job
         SpanOps.fieldValuesFromCatalog(
-          s.read.parquet(outDir), "operation", col("service") === "purchase")
+          s.read.schema(catalog.schema).parquet(outDir), "operation", col("service") === "purchase")
           .orderBy("value")
       },
       cte("""SELECT DISTINCT operation AS value FROM spans

@@ -12,9 +12,10 @@ import org.scalatest.matchers.should.Matchers
   * spills to local disk — the 100 M-event escape hatch when session
   * state outgrows executor heap) must not change ANY streaming result.
   * This spec pins that equivalence plus the metrics surface an
-  * operator would watch to make the call, so the
-  * SPARK_GRAFT_STATE_STORE=rocksdb knob in StreamingQueries.isolated
-  * is a measured trade, not a leap. */
+  * operator would watch to make the call, so choosing RocksDB for a
+  * big session store is a measured trade, not a leap. The
+  * streaming_sessions_rocksdb surface forces the provider and shares
+  * its oracle with the default-provider session surface. */
 class RocksDbStateStoreSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
   private val t0 = 1704067200000000L // 2024-01-01 UTC, micros

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{SpanOps, TimePartitioner, TraceSearch}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -50,34 +49,6 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
     case q: QueryStageExec => nodes(q.plan)
     case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
-  }
-
-  /** Jobs Spark starts from this thread while `build` runs. A marker job
-    * after it flushes the listener: events reach it in order. */
-  private def jobsDuring(build: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-tp-build-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "build")
-      build
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      marker.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   private lazy val outDir = {
