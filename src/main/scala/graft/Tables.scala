@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import scala.jdk.CollectionConverters._
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -46,6 +50,17 @@ object Tables {
   def documents(s: SparkSession, dir: String): DataFrame = load(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")
 
+  /** Rows of a parquet `table`, summed from its files' footers on the
+    * driver: no Spark job, no data read. The file list is the one the
+    * relation already holds. */
+  def footerRows(table: DataFrame): Long = {
+    val conf = table.sparkSession.sparkContext.hadoopConfiguration
+    table.inputFiles.iterator.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
   /** Per-(session, path) memo of the UNEXECUTED lazy DataFrame.
     *
     * `spark.read.parquet` pays a file listing plus a footer read for
@@ -55,11 +70,17 @@ object Tables {
     * memo holds only the logical plan: nothing is computed or cached
     * at build time, every action still scans the parquet files, so a
     * bench/oracle invocation (a fresh JVM) provably computes from the
-    * inputs alone. Keyed by session identity so cloned sessions
-    * (streaming isolation) resolve their own copies against their own
-    * SQLConf. Bounded: distinct (session, table) pairs only. */
+    * inputs alone. Keyed by session identity, and an entry keeps its
+    * session reachable for the life of the JVM — so only long-lived
+    * sessions belong here. A streaming run's short-lived clone never
+    * enters the memo: it reads its inputs itself, under the schema of
+    * its caller's entry (StreamingQueries.isolated). Bounded: distinct
+    * (session, table) pairs only. */
   private val planMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  /** Distinct sessions the memo holds. */
+  private[graft] def memoSessions: Int = planMemo.keySet.asScala.map(_._1).size
 
   private def load(s: SparkSession, dir: String, name: String): DataFrame =
     planMemo.computeIfAbsent((s, s"$dir/$name.parquet"),

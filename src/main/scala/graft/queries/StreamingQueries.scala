@@ -30,25 +30,68 @@ import org.apache.spark.sql.types.StructType
   * Session isolation: each query runs on a CLONED session
   * (`newSession` — same SparkContext, separate SQLConf) so tuning the
   * state-store parallelism can't race with other queries on the shared
-  * session's `spark.sql.shuffle.partitions`.
+  * session's `spark.sql.shuffle.partitions`. Building the clone starts
+  * no Spark job (footer row counts, the caller's schemas), and the
+  * clone runs with artifact isolation off, so a repeated replay hits
+  * the codegen cache instead of recompiling per session (see
+  * [[isolated]]). Nothing keeps the clone once its run is over.
   */
 object StreamingQueries {
 
   private val GapSeconds = 60L
   private val MaxSpans = 10000
 
-  /** Cloned session with state-store parallelism sized to the backlog:
-    * small backlogs want few partitions (state-store init dominates —
-    * 8 was measured best at the driver SFs), big ones want real
-    * parallelism (a pinned 8 made the 10M-event session-window pack
-    * 18.8× for 10× data: 1.25M rows per state partition). The events
-    * row count comes from parquet footers — no data scan. */
-  private def isolated(s: SparkSession, dir: String): SparkSession = {
+  /** A streaming replay's scratch session `ss` (see [[isolated]]) and
+    * the tables of `dir` read on it. Each read takes its schema from the
+    * caller's memoized relation and stays outside `Tables`' memo: no
+    * schema-inference job, and nothing keeps the clone reachable once
+    * its run is over. */
+  private final class Replay(caller: SparkSession, val dir: String, val ss: SparkSession) {
+    private def read(like: DataFrame, table: String): DataFrame =
+      ss.read.schema(like.schema).parquet(s"$dir/$table.parquet")
+    def events: DataFrame = read(Tables.events(caller, dir), "events")
+    def documents: DataFrame = read(Tables.documents(caller, dir), "documents")
+  }
+
+  /** A fresh clone of `s` for one streaming run, sized to the backlog
+    * and sharing the executors' codegen cache. It starts no Spark job:
+    * the row count comes from the parquet footers of the caller's
+    * memoized events relation, read on the driver.
+    *
+    * Spark 4.1 runs every job of a session under artifact isolation
+    * with a class loader made for that session, and keys its codegen
+    * cache by class loader. Every new session, including the clone
+    * Spark makes for each streaming query, would therefore recompile
+    * the same generated classes (23 per streaming_span_buffer run).
+    * graft adds no artifacts to this internal clone, so it turns
+    * isolation off before the first query; the query's own clone copies
+    * that conf, and its micro-batches share the default class loader
+    * and its cache. */
+  private def isolated(s: SparkSession, dir: String): Replay = {
     val ss = s.newSession()
-    val rows = Tables.events(ss, dir).count()
-    val parts = math.min(32L, math.max(8L, rows / 250000L))
-    ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    ss
+    ss.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    // Tables.events' reader setting, for the clone's own events reads
+    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ss.conf.set("spark.sql.shuffle.partitions",
+      statePartitions(Tables.footerRows(Tables.events(s, dir))).toString)
+    new Replay(s, dir, ss)
+  }
+
+  /** Backlog rows per state partition below 8 partitions: the sf0.1
+    * streaming block (100 000 rows, 17 surfaces, 4 cores) took 30.8,
+    * 28.5, 29.3 and 35.1 s at 1, 2, 4 and 8 partitions. */
+  private val RowsPerStatePartition = 50000L
+
+  /** State-store parallelism for a backlog of `rows`. Small backlogs
+    * want few partitions: each state-store task pays a fixed init and
+    * commit cost, so the 1 500 keys of a 20 000-row backlog ran fastest
+    * in one partition. From 1 M rows it is one partition per 250 000
+    * rows, at least 8 and at most 32: a pinned 8 made the 10M-event
+    * session-window pack 18.8× for 10× data (1.25M rows per state
+    * partition). */
+  private[graft] def statePartitions(rows: Long): Int = {
+    val small = math.min(8L, (rows + RowsPerStatePartition - 1) / RowsPerStatePartition)
+    math.min(32L, math.max(small, math.max(1L, rows / 250000L))).toInt
   }
 
   /** File stream over `<dir>/<table>.parquet`, under the schema of
@@ -77,8 +120,8 @@ object StreamingQueries {
   }
 
   /** File-source span stream over the events table. */
-  private def spanStream(ss: SparkSession, dir: String, richOps: Boolean): Dataset[graft.model.Span] = {
-    val eventsStream = tableStream(Tables.events(ss, dir), dir, "events")
+  private def spanStream(r: Replay, richOps: Boolean): Dataset[graft.model.Span] = {
+    val eventsStream = tableStream(r.events, r.dir, "events")
     // at ingest time parents are unknown (the reference's indexer also
     // sees bare spans) — no lag window here, streams can't sort history
     TraceDataset.toSpanDataset(eventsStream.select(
@@ -152,9 +195,9 @@ object StreamingQueries {
   /** Run `stream` to completion, appending `perBatch` of every
     * micro-batch to one parquet table — batch logic per micro-batch,
     * for results that are not incrementally maintainable — and read it
-    * back on the caller's session. With nothing landed the result is
-    * empty with `perBatch`'s output schema (applied to an empty frame
-    * of the stream schema: analysis only, no job). */
+    * back on the caller's session under `perBatch`'s output schema
+    * (applied to an empty frame of the stream schema: analysis only, no
+    * job). With nothing landed the result is empty with that schema. */
   private[graft] def runForeachBatch(caller: SparkSession, stream: DataFrame, name: String)(
       perBatch: DataFrame => DataFrame): DataFrame = {
     val base = Scratch.fresh(s"graft_stream_$name")
@@ -171,21 +214,23 @@ object StreamingQueries {
       new java.util.ArrayList[Row](), stream.schema)).schema)
   }
 
-  /** The parquet table a stream landed at `out`. A stream that commits
-    * zero batches never creates that path: hand back an empty table
-    * with `schema` instead of an AnalysisException. */
-  private def readOrEmpty(caller: SparkSession, out: String, schema: => StructType): DataFrame = {
+  /** The parquet table a stream landed at `out`, read under the
+    * `schema` it was written with: no footer-inference job. A stream
+    * that commits zero batches never creates that path: hand back an
+    * empty table with `schema` instead of an AnalysisException. */
+  private def readOrEmpty(caller: SparkSession, out: String, schema: StructType): DataFrame = {
     val p = new Path(out)
-    if (p.getFileSystem(caller.sparkContext.hadoopConfiguration).exists(p)) caller.read.parquet(out)
+    if (p.getFileSystem(caller.sparkContext.hadoopConfiguration).exists(p))
+      caller.read.schema(schema).parquet(out)
     else caller.createDataFrame(new java.util.ArrayList[Row](), schema)
   }
 
   /** A3: flatMapGroupsWithState accumulate-and-seal, summarized as
     * (trace_id, span_count) per SEALED buffer. */
   private def run(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
+    val r = isolated(s, dir)
     val sealedBuffers = SpanBufferStream.assemble(
-      spanStream(ss, dir, richOps = true), gapSeconds = GapSeconds, maxSpans = MaxSpans)
+      spanStream(r, richOps = true), gapSeconds = GapSeconds, maxSpans = MaxSpans)
     runToParquet(s, sealedBuffers
       .select(col("traceId").as("trace_id"), size(col("spans")).cast("long").as("span_count")),
       "buffers").orderBy("trace_id")
@@ -196,9 +241,9 @@ object StreamingQueries {
     * sessions (the reference's accumulate window restarted). Emits
     * (trace_id, session_start_us, span_count) per CLOSED session. */
   private def runSessionWindow(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
+    val r = isolated(s, dir)
     val sessions = SpanBufferStream.assembleSessions(
-      spanStream(ss, dir, richOps = true), gapSeconds = GapSeconds)
+      spanStream(r, richOps = true), gapSeconds = GapSeconds)
     runToParquet(s, sessions, "sessions").orderBy("trace_id", "session_start_us")
   }
 
@@ -209,11 +254,11 @@ object StreamingQueries {
     * RocksDbStateStoreSpec: both surfaces share one oracle, so a
     * provider-dependent result difference fails the round. */
   private def runSessionWindowRocks(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+    val r = isolated(s, dir)
+    r.ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val sessions = SpanBufferStream.assembleSessions(
-      spanStream(ss, dir, richOps = true), gapSeconds = GapSeconds)
+      spanStream(r, richOps = true), gapSeconds = GapSeconds)
     runToParquet(s, sessions, "sessions_rocksdb")
       .orderBy("trace_id", "session_start_us")
   }
@@ -226,8 +271,8 @@ object StreamingQueries {
     * hash-checked here). Epoch-aligned windows emit when the final
     * watermark passes their end (append eviction: end <= watermark). */
   private def runIndexDocs(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val windowed = spanStream(ss, dir, richOps = true)
+    val r = isolated(s, dir)
+    val windowed = spanStream(r, richOps = true)
       .withColumn("event_time", timestamp_micros(col("startUs")))
       .withWatermark("event_time", s"$GapSeconds seconds")
       .groupBy(window(col("event_time"), s"$GapSeconds seconds"),
@@ -252,8 +297,8 @@ object StreamingQueries {
     * domains, spec-covered — exactly how text_cms_topk pairs with
     * text_top_terms_approx. */
   private def runLatencyQuantiles(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val windowed = spanStream(ss, dir, richOps = false)
+    val r = isolated(s, dir)
+    val windowed = spanStream(r, richOps = false)
       .withColumn("event_time", timestamp_micros(col("startUs")))
       .withWatermark("event_time", s"$GapSeconds seconds")
       .groupBy(window(col("event_time"), s"$GapSeconds seconds"),
@@ -280,8 +325,8 @@ object StreamingQueries {
     * maintainable, so the production split is exactly this
     * stream-aggregates / serving-layer-ranks pair. */
   private def runTopK(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val windowed = spanStream(ss, dir, richOps = false)
+    val r = isolated(s, dir)
+    val windowed = spanStream(r, richOps = false)
       .withColumn("event_time", timestamp_micros(col("startUs")))
       .withWatermark("event_time", s"$GapSeconds seconds")
       .groupBy(window(col("event_time"), s"$GapSeconds seconds"), col("service"))
@@ -303,8 +348,8 @@ object StreamingQueries {
     * engine ALSO has the zero-state fast path). Output equals the
     * batch filter by construction. */
   private def runAlerts(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val alerts = spanStream(ss, dir, richOps = false)
+    val r = isolated(s, dir)
+    val alerts = spanStream(r, richOps = false)
       .filter(col("durationUs") > 300000L)
       .select(col("traceId").as("trace_id"), col("spanId").cast("long").as("span_id"),
         col("service"), col("startUs").as("start_us"),
@@ -320,8 +365,8 @@ object StreamingQueries {
     * the AvailableNow replay the sealed window set is a pure function
     * of the data, so the oracle is the plain per-hour GROUP BY. */
   private def runSloBurn(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val windowed = spanStream(ss, dir, richOps = false)
+    val r = isolated(s, dir)
+    val windowed = spanStream(r, richOps = false)
       .withColumn("event_time", timestamp_micros(col("startUs")))
       .withWatermark("event_time", s"$GapSeconds seconds")
       .groupBy(window(col("event_time"), "1 hour"), col("service"))
@@ -341,8 +386,8 @@ object StreamingQueries {
     * dropDuplicates must emit each exactly once — the per-service
     * counts then equal the batch DISTINCT, which is the oracle. */
   private def runDedup(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val spans = spanStream(ss, dir, richOps = false)
+    val r = isolated(s, dir)
+    val spans = spanStream(r, richOps = false)
     val doubled = spans.union(spans)
     runToMemory(s, SpanBufferStream.dedupSpans(doubled, gapSeconds = GapSeconds)
       .groupBy("service").count(), "dedup_spans").orderBy("service")
@@ -371,8 +416,8 @@ object StreamingQueries {
     * inner and outer ORACLES (which encode those constants) can't
     * silently desynchronize from the Spark side or each other. */
   private def errorPurchaseJoin(s: SparkSession, dir: String, joinType: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val spans = spanStream(ss, dir, richOps = false)
+    val r = isolated(s, dir)
+    val spans = spanStream(r, richOps = false)
     val errors = spans
       .filter(col("service") === "error")
       .select(col("traceId").as("trace_id"), col("spanId").cast("long").as("err_span_id"),
@@ -417,16 +462,16 @@ object StreamingQueries {
     * counts over the whole replay — deterministic, so fully
     * hash-checked. */
   private def runStreamEnrich(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
+    val r = isolated(s, dir)
     // static dim derived from the batch table (deterministic): median
     // span duration per service, rounded to micros — the "SLO" column
-    val dim = graft.operators.SpanOps.spansFromEvents(Tables.events(ss, dir))
+    val dim = graft.operators.SpanOps.spansFromEvents(r.events)
       .groupBy("service")
       // FLOOR before the BIGINT cast: Spark's double→long cast
       // truncates while DuckDB's rounds half-even, and an
       // even-count median interpolates to .5 values routinely
       .agg(expr("CAST(FLOOR(percentile(duration_us, 0.5)) AS BIGINT)").as("slo_us"))
-    val enriched = spanStream(ss, dir, richOps = false)
+    val enriched = spanStream(r, richOps = false)
       .select(col("service"), col("durationUs"))
       .join(broadcast(dim), "service")
       .select(col("service"),
@@ -498,9 +543,9 @@ object StreamingQueries {
     * final per-channel report (exact-integer credits make that sum
     * partitioning-independent). */
   private def runAttribution(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
+    val r = isolated(s, dir)
     val credits = SpanBufferStream.attributionCredits(
-        spanStream(ss, dir, richOps = false), gapSeconds = GapSeconds)
+        spanStream(r, richOps = false), gapSeconds = GapSeconds)
       .toDF("channel", "first_touch", "last_touch", "linear_ppm", "touches")
     runToParquet(s, credits, "attribution")
       .groupBy("channel")
@@ -521,8 +566,8 @@ object StreamingQueries {
     * lets a plain batch oracle hash-check a 4-batch replay where
     * every batch interleaves old and new versions of most keys. */
   private def runUpsert(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val ev = Tables.events(ss, dir)
+    val r = isolated(s, dir)
+    val ev = r.events
     // sliced on span_id like the late-drop replay, so LATER batches
     // routinely carry EARLIER versions of a key: the merge rule (max
     // version), not arrival order, must decide
@@ -535,6 +580,7 @@ object StreamingQueries {
     val stateBase = Scratch.fresh("graft_stream_upsert_state")
     val w = Window.partitionBy("trace_id", "service")
       .orderBy(col("start_us").desc, col("span_id").desc)
+    val schema = stream.schema
     val version = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = stream.writeStream
       .option("checkpointLocation", s"$stateBase/ckpt")
@@ -545,7 +591,7 @@ object StreamingQueries {
         val v = version.get()
         val merged =
           if (v == 0) reduced
-          else ss.read.parquet(s"$stateBase/v$v").unionByName(reduced)
+          else r.ss.read.schema(schema).parquet(s"$stateBase/v$v").unionByName(reduced)
             .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
         merged.write.mode("overwrite").parquet(s"$stateBase/v${v + 1}")
         version.incrementAndGet()
@@ -555,13 +601,13 @@ object StreamingQueries {
     q.awaitTermination()
     require(version.get() == LateBatches,
       s"upsert replay expected $LateBatches data batches, saw ${version.get()}")
-    s.read.parquet(s"$stateBase/v${version.get()}")
+    s.read.schema(schema).parquet(s"$stateBase/v${version.get()}")
       .orderBy("trace_id", "service")
   }
 
   private def runLateDrops(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val ev = Tables.events(ss, dir)
+    val r = isolated(s, dir)
+    val ev = r.events
     val windowed = slicedStream(ev.select(col("event_id"),
         Tables.eventTimeUs(ev).as("start_us"),
         col("event_type").as("service")),
@@ -926,8 +972,8 @@ object StreamingQueries {
     * scoring via the shared row-local expressions, parquet file sink
     * (never a memory sink — the result is corpus-sized). */
   private def runQualityEnsemble(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
-    val docs = Tables.documents(ss, dir)
+    val r = isolated(s, dir)
+    val docs = r.documents
     val mm = TextQueries.qualityEnsembleCalibration(
       TextQueries.qualityEnsembleSignals(docs)).localCheckpoint()
     runForeachBatch(s, tableStream(docs, dir, "documents"), "qens") { batch =>
@@ -940,11 +986,13 @@ object StreamingQueries {
     * matches would collect to the driver) and is read back for the
     * caller. */
   private def runIncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val ss = isolated(s, dir)
+    val r = isolated(s, dir)
     // r13: consume the persisted build-once index (IndexStore) — the
-    // streaming twin amortizes the same build as the batch surface
-    val (oldFp, stop) = graft.operators.IndexStore.winnowIndex(ss, dir)
-    val newStream = TextQueries.mutatedTenth(tableStream(Tables.documents(ss, dir), dir, "documents"))
+    // streaming twin amortizes the same build as the batch surface. On
+    // the caller: a first build reads documents through Tables' memo,
+    // which must not keep the clone
+    val (oldFp, stop) = graft.operators.IndexStore.winnowIndex(s, dir)
+    val newStream = TextQueries.mutatedTenth(tableStream(r.documents, dir, "documents"))
     runForeachBatch(s, newStream, "incr") { batch =>
       TextQueries.incrementalProbe(oldFp, stop, batch)
     }.orderBy("new_id")

@@ -59,16 +59,18 @@ object TraceQueries {
     * whitelist query charged the GENERATOR to the surface (measured
     * 136 s of trace_field_names' sf100 entry was to_json, not the
     * presence scan). Queries over richSpans now time what they claim:
-    * JSON extraction/search over a stored span relation. */
-  private def richSpans(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(Scratch.once("graft_rich_spans_", dir) { d =>
-      spans(s, dir).withColumn("tags", to_json(struct(
-        get_json_object(col("tags"), "$.k").cast("int").as("k"),
-        (col("service") === "error").as("err"),
-        (col("duration_us") / 1000.0).as("score"),
-        upper(substring(col("service"), 1, 3)).as("region"))))
-        .write.mode("overwrite").parquet(d)
+    * JSON extraction/search over a stored span relation, read back
+    * under the written frame's schema (no footer-inference job). */
+  private def richSpans(s: SparkSession, dir: String): DataFrame = {
+    val rich = spans(s, dir).withColumn("tags", to_json(struct(
+      get_json_object(col("tags"), "$.k").cast("int").as("k"),
+      (col("service") === "error").as("err"),
+      (col("duration_us") / 1000.0).as("score"),
+      upper(substring(col("service"), 1, 3)).as("region"))))
+    s.read.schema(rich.schema).parquet(Scratch.once("graft_rich_spans_", dir) { d =>
+      rich.write.mode("overwrite").parquet(d)
     })
+  }
 
   /** Spark's default JSON timestamp pattern is millisecond-precision —
     * a silent 1000× granularity loss on micros data — so the wire
@@ -376,13 +378,13 @@ object TraceQueries {
     // which is exactly what the oracle checks.
     "trace_zorder_scan" -> QueryDef.sql(
       (s, dir) => {
+        val keyed = spans(s, dir).select(col("trace_id").cast("long").as("trace_key"),
+          col("span_id"), col("service"), col("start_us"))
         val outDir = Scratch.once("graft_zorder_spans_", dir) { d =>
-          graft.operators.ZOrderLayout.writeZOrdered(
-            spans(s, dir).select(col("trace_id").cast("long").as("trace_key"),
-              col("span_id"), col("service"), col("start_us")),
-            d, "trace_key", "start_us", nFiles = 16)
+          graft.operators.ZOrderLayout.writeZOrdered(keyed, d, "trace_key", "start_us", nFiles = 16)
         }
-        s.read.parquet(outDir)
+        // under the written frame's schema: no footer-inference job
+        s.read.schema(keyed.schema).parquet(outDir)
           .filter(col("trace_key").between(0, 4) &&
             col("start_us").between(T0, T0 + 3 * DayUs))
           .groupBy("service").agg(count(lit(1)).as("n_spans"))

@@ -66,7 +66,8 @@ class ScratchSpec extends AnyFunSpec with Matchers with SparkTestBase {
       Paths.get(a).getParent shouldBe root
     }
 
-    for (name <- Seq("trace_partitioned_scan", "trace_field_values_meta"))
+    for (name <- Seq("trace_partitioned_scan", "trace_field_values_meta",
+        "trace_field_names", "trace_zorder_scan"))
       it(s"makes a second $name build run no Spark job over the same layout") {
         val first = SparkEntry.queries(name)(spark, sfDir)
         var second: DataFrame = null
