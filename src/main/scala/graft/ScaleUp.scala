@@ -30,18 +30,10 @@ object ScaleUp {
     val Array(srcDir, outDir, factorStr) = args
     val factor = factorStr.toInt
     require(factor >= 1, "factor must be >= 1")
-    // reuse a live session when run in-process (specs); only stop what
-    // we ourselves created
-    val preexisting =
-      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // reuse a live session as it is when run in-process (specs); only
+    // stop what we ourselves created
+    val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val spark = preexisting.getOrElse(GraftSession())
 
     /** factor copies of df, each with the given long key columns
       * shifted into a disjoint range. Strides for FOREIGN keys must be
@@ -57,10 +49,13 @@ object ScaleUp {
     def stride(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).head.getLong(0) + 1L
 
+    // rows from the written files' footers: a df.count() would re-run
+    // the whole replicate-union
     def write(df: DataFrame, name: String): Unit = {
-      df.coalesce(math.max(1, factor / 2))
-        .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      println(s"[scaleup] $name: ${df.count()} rows")
+      val path = s"$outDir/$name.parquet"
+      df.coalesce(math.max(1, factor / 2)).write.mode("overwrite").parquet(path)
+      val rows = Tables.footerRows(spark.read.schema(df.schema).parquet(path))
+      println(s"[scaleup] $name: $rows rows")
     }
 
     // dims: straight copies
@@ -88,6 +83,6 @@ object ScaleUp {
     write(replicate(events,
       Seq("event_id" -> stride(events, "event_id"), "user_id" -> stride(events, "user_id"))),
       "events")
-    if (!preexisting) spark.stop()
+    if (preexisting.isEmpty) spark.stop()
   }
 }

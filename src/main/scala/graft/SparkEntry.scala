@@ -9,7 +9,7 @@ object SparkEntry {
   /** Full coverage inventory (SURVEY.md §2). */
   val allDefs: Map[String, QueryDef] =
     RelationalQueries.defs ++ TraceQueries.defs ++ TextQueries.defs ++
-      TextQueries.wave26Defs ++ VectorQueries.defs ++ StreamingQueries.defs
+      VectorQueries.defs ++ StreamingQueries.defs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -21,7 +21,6 @@ case class Span(
     kind: String, // "client" | "server" | ""
     tags: Map[String, String]) {
   def endUs: Long = startUs + durationUs
-  def isRoot: Boolean = parentSpanId.isEmpty
   def isClient: Boolean = kind == "client"
   def isServer: Boolean = kind == "server"
 }

@@ -41,8 +41,7 @@ object IndexStore {
 
   /** 32 buckets matches the local-mode parallelism; a cluster build
     * would size this by index bytes (e.g. one bucket per ~256 MB). */
-  private def buckets: Int =
-    sys.env.getOrElse("GRAFT_INDEX_BUCKETS", "32").toInt
+  private val buckets = 32
 
   /** Default root is PER-PROCESS (a [[graft.Scratch]] directory, gone
     * when the JVM exits): within one JVM the build-once/probe-many split

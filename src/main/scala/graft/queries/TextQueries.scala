@@ -3537,10 +3537,10 @@ object TextQueries {
          |  CAST(dcg * 1000000 // ($IdcgCaseSql) AS BIGINT) AS ndcg_ppm
          |FROM per JOIN pool ON per.q_id = pool.q_id
          |ORDER BY per.q_id""".stripMargin)
-  )
+  ) ++ wave26Defs
 
   /** Threshold-sweep and fertility surfaces appended by wave 26. */
-  val wave26Defs: Map[String, QueryDef] = Map(
+  private lazy val wave26Defs: Map[String, QueryDef] = Map(
     // B43: dedup threshold tuning curve — before committing a Jaccard
     // cutoff, the curve every dedup rollout reads: pairs flagged, docs
     // lost and corpus shrink at each candidate threshold. Pair

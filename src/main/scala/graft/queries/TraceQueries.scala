@@ -3640,7 +3640,7 @@ object TraceQueries {
             explode(expr("sequence(1, 40)")).as("r"))
           .withColumn("u", expr(
             "((((span_id % 1048576) + r * 1048573) * 2654435761) div 1024) % 1000000"))
-          .withColumn("w", expr(poissonWCase))
+          .withColumn("w", expr(poissonWBody))
         val means = rep.groupBy("service", "r")
           .agg(sum((col("w") * col("duration_us")).cast(DecimalType(38, 0))).as("swx"),
             sum(col("w")).as("sw"))
@@ -3661,7 +3661,7 @@ object TraceQueries {
         |  SELECT service, duration_us, r,
         |    ((((span_id % 1048576) + r * 1048573) * 2654435761) // 1024) % 1000000 AS u
         |  FROM spans CROSS JOIN (SELECT unnest(range(1, 41)) AS r) rs),
-        |wt AS (SELECT service, r, duration_us, $poissonWCaseSql AS w FROM rep),
+        |wt AS (SELECT service, r, duration_us, $poissonWBody AS w FROM rep),
         |m AS (
         |  SELECT service, r,
         |    CAST(SUM(CAST(w AS HUGEINT) * duration_us)
@@ -4624,6 +4624,4 @@ object TraceQueries {
       | WHEN u < 919698 THEN 2 WHEN u < 981011 THEN 3
       | WHEN u < 996340 THEN 4 WHEN u < 999405 THEN 5 ELSE 6 END"""
       .stripMargin.replace("\n", "")
-  private lazy val poissonWCase: String = poissonWBody
-  private lazy val poissonWCaseSql: String = poissonWBody
 }

@@ -33,4 +33,9 @@ class BenchCompactSpec extends AnyFunSuite {
   test("empty error map is an object with a zero count") {
     assert(Bench.compactErrJson(Nil) === "{\"n_errors\": 0}")
   }
+
+  test("jq escapes control characters, quotes and backslashes as JSON") {
+    val raw = "a\tb\nc\"d\\e" + 1.toChar + "f"
+    assert(Bench.jq(raw) === "\"a\\tb\\nc\\\"d\\\\e\\u0001f\"")
+  }
 }

@@ -5,8 +5,6 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funspec.AnyFunSpec
 import org.scalatest.matchers.should.Matchers
-import scala.jdk.CollectionConverters._
-import scala.util.Using
 
 /** The scratch spine: one per-process temp root that every temp
   * directory of the main sources lives under, one write-once memo for
@@ -25,23 +23,8 @@ class ScratchSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
   describe("temp directories") {
     it("are created only by Scratch in the main sources") {
-      val buildRoot = Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
-        .takeWhile(_ != null).take(8)
-        .find(d => Files.exists(d.resolve("build.sbt")))
-        .getOrElse(fail("no build.sbt found walking up from CWD — cannot locate main sources"))
-      val mainRoot = buildRoot.resolve("src/main/scala")
-      Files.isDirectory(mainRoot) shouldBe true
-      val sites: List[Path] = Using.resource(Files.walk(mainRoot)) { walk =>
-        walk.iterator().asScala
-          .filter(_.toString.endsWith(".scala"))
-          .flatMap { p =>
-            // strip block/line comments so Scaladoc mentions don't count
-            val code = Files.readString(p)
-              .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
-            "createTempDirectory".r.findAllIn(code).map(_ => p)
-          }.toList
-      }
-      sites.map(_.getFileName.toString).distinct shouldBe List("Scratch.scala")
+      SourceLint.sites("main", "createTempDirectory")
+        .map(_.getFileName.toString).distinct shouldBe List("Scratch.scala")
     }
 
     it("hold the default index store and streaming sinks under the one root") {

@@ -40,15 +40,7 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The mains' session on a fixed local[4], whatever SPARK_GRAFT_CPUS
+    * says, so plan-shape and job-count specs see 4 shuffle partitions. */
+  lazy val session: SparkSession = GraftSession("4")
 }

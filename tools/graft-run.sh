@@ -17,6 +17,7 @@ OPENS_FLAGS=()
 for p in "${ADD_OPENS[@]}"; do OPENS_FLAGS+=(--add-opens "$p=ALL-UNNAMED"); done
 exec java "${OPENS_FLAGS[@]}" \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
+  -XX:ReservedCodeCacheSize="${SPARK_CODE_CACHE:-512m}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
