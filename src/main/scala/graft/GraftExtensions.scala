@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{ArrDot, ArrDotL, ArrL2Sq, CharNgrams, FnvHash64, JsonTagsMap, LshBandKeys, LshBandKeysLin, MinHashSig, PackBlob, SimHash48, UnpackBlob, WinnowFps}
+import graft.functions.{ArrDot, ArrDotL, ArrL2Sq, CharNgrams, FnvHash64, JsonTagsMap, LshBandKeys, LshFamily, MinHashSig, PackBlob, SimHash48, UnpackBlob, WinnowFps}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -29,8 +29,8 @@ object GraftExtensions {
     ("simhash48", SimHash48.info, e => SimHash48(e.head)),
     ("minhash_sig", MinHashSig.info, e => MinHashSig(e(0), e(1))),
     ("json_tags_map", JsonTagsMap.info, e => JsonTagsMap(e.head)),
-    ("lsh_band_keys", LshBandKeys.info, e => LshBandKeys(e(0), e(1), e(2))),
-    ("lsh_band_keys_lin", LshBandKeysLin.info, e => LshBandKeysLin(e(0), e(1), e(2))),
+    ("lsh_band_keys", LshFamily.Murmur.info, e => LshBandKeys(e(0), e(1), e(2), LshFamily.Murmur)),
+    ("lsh_band_keys_lin", LshFamily.Lin.info, e => LshBandKeys(e(0), e(1), e(2), LshFamily.Lin)),
     ("arr_dot", ArrDot.info, e => ArrDot(e(0), e(1))),
     ("arr_l2sq", ArrL2Sq.info, e => ArrL2Sq(e(0), e(1))),
     ("arr_dotl", ArrDotL.info, e => ArrDotL(e(0), e(1))),

@@ -7,8 +7,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native banded-LSH bucket keys as one codegen'd Catalyst expression:
-  * `lsh_band_keys(v, bitsPerBand, bands)` → `array<string>` of `bands`
-  * keys, each `"<band>:"` + that band's hyperplane sign bits.
+  * `lsh_band_keys(v, bitsPerBand, bands)` (and its
+  * `lsh_band_keys_lin` twin) → `array<string>` of `bands` keys, each
+  * `"<band>:"` + that band's hyperplane sign bits. The two SQL names
+  * differ only in the hyperplane weights, the [[LshFamily]].
   *
   * WHY an expression and not a Column tree: the declarative form is
   * bands × bitsPerBand plane dots, each a 64-term sum — at 6 bands ×
@@ -17,28 +19,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * the compile and falls back to interpreted eval, and the query pays
   * ~5 s of fixed compile+interpret cost REGARDLESS of row count
   * (measured at sf0.1: 5.9 s for 300 rows). This expression is one
-  * static call, so whole-stage codegen stays intact and the per-row
+  * method call, so whole-stage codegen stays intact and the per-row
   * cost is the arithmetic itself.
   *
-  * Bit-identical to the declarative chain and the SQL oracle: weights
-  * come from [[graft.operators.VectorOps.lshWeights]] (the single
-  * formula source), and each plane dot accumulates left-to-right in
-  * index order — the same IEEE additions as the left-associated
-  * `reduce(_ + _)` Column chain and the literal SQL chain, so sign
-  * bits (and therefore buckets and candidate pairs) cannot drift.
+  * Each plane dot accumulates left-to-right in index order — the same
+  * IEEE additions as the left-associated `reduce(_ + _)` Column chain
+  * and the SQL oracles' folds, so sign bits (and therefore buckets and
+  * candidate pairs) cannot drift.
   */
-case class LshBandKeys(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
+case class LshBandKeys(first: Expression, second: Expression, third: Expression,
+    family: LshFamily) extends TernaryExpression {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "lsh_band_keys"
+  override def prettyName: String = family.sqlName
+  // the family shows through the name, not as a fourth argument
+  override protected def stringArgs: Iterator[Any] = Iterator(first, second, third)
 
   override protected def nullSafeEval(v: Any, bitsPerBand: Any, bands: Any): Any =
-    LshBandKeys.compute(v.asInstanceOf[ArrayData],
+    family.keys(v.asInstanceOf[ArrayData],
       bitsPerBand.asInstanceOf[Int], bands.asInstanceOf[Int])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, b, n) => s"graft.functions.LshBandKeys.compute($v, $b, $n)")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fam = ctx.addReferenceObj("lshFamily", family, classOf[LshFamily].getName)
+    defineCodeGen(ctx, ev, (v, b, n) => s"$fam.keys($v, $b, $n)")
+  }
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): LshBandKeys =
@@ -51,34 +55,33 @@ case class LshBandKeys(first: Expression, second: Expression, third: Expression)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case _ =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lsh_band_keys requires (array<double>, literal int, literal int), got " +
+          s"${family.sqlName} requires (array<double>, literal int, literal int), got " +
             s"(${first.dataType.catalogString}, ${second.dataType.catalogString}, " +
             s"${third.dataType.catalogString})")
     }
 }
 
-object LshBandKeys {
+/** A hyperplane weight family of [[LshBandKeys]]: its SQL name and the
+  * (planes × dim) weight table, cached per (dim, planes) as primitive
+  * arrays so the hot loop never recomputes a weight. */
+sealed abstract class LshFamily(val sqlName: String, usage: String) extends Serializable {
 
-  // weights are deterministic in (planeCount, dim); cache the boxed-free
-  // form so the hot loop reads primitive arrays
+  protected def table(dim: Int, planes: Int): Array[Array[Double]]
+
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Double]]]()
 
-  private def weights(dim: Int, planes: Int): Array[Array[Double]] =
-    cache.computeIfAbsent((dim, planes),
-      _ => graft.operators.VectorOps.lshWeights(dim, planes).map(_.toArray).toArray)
-
-  /** All band keys for one vector; see class doc for the exactness
-    * contract. Inputs must be containsNull=false arrays: ArrayData.getDouble
-    * on a null slot reads 0.0 (the slot silently drops out of the dot
-    * product), whereas the declarative Column chain would null-propagate
-    * the whole sum and `when(null >= 0)` would emit a '0' bit — the two
-    * paths diverge on null-containing vectors, so we don't accept them
-    * (the embeddings table and every caller produce dense non-null
-    * arrays; LshBandKeysSpec pins native ≡ declarative on that domain). */
-  def compute(v: ArrayData, bitsPerBand: Int, bands: Int): ArrayData = {
+  /** All band keys for one vector. Inputs must be containsNull=false
+    * arrays: ArrayData.getDouble on a null slot reads 0.0 (the slot
+    * silently drops out of the dot product), whereas the declarative
+    * Column chain would null-propagate the whole sum and
+    * `when(null >= 0)` would emit a '0' bit — the two paths diverge on
+    * null-containing vectors, so we don't accept them (the embeddings
+    * table and every caller produce dense non-null arrays;
+    * VectorOpsSpec pins native ≡ declarative on that domain). */
+  def keys(v: ArrayData, bitsPerBand: Int, bands: Int): ArrayData = {
     val dim = v.numElements()
-    val ws = weights(dim, bitsPerBand * bands)
+    val ws = cache.computeIfAbsent((dim, bitsPerBand * bands), k => table(k._1, k._2))
     val out = new Array[Any](bands)
     var j = 0
     while (j < bands) {
@@ -100,7 +103,56 @@ object LshBandKeys {
   }
 
   val info: ExpressionInfo = new ExpressionInfo(
-    classOf[LshBandKeys].getName, null, "lsh_band_keys",
-    "_FUNC_(v, bitsPerBand, bands) - banded random-hyperplane LSH bucket " +
-      "keys ('<band>:' + sign bits) of a double vector.", "")
+    classOf[LshBandKeys].getName, null, sqlName, s"_FUNC_(v, bitsPerBand, bands) - $usage", "")
+}
+
+object LshFamily {
+
+  /** MurmurHash3-drawn hyperplanes from
+    * [[graft.operators.VectorOps.lshWeights]] (the single formula
+    * source), which an SQL oracle replays as pre-rendered literals. */
+  case object Murmur extends LshFamily("lsh_band_keys",
+      "banded random-hyperplane LSH bucket keys ('<band>:' + sign bits) of a double vector.") {
+    protected def table(dim: Int, planes: Int): Array[Array[Double]] =
+      graft.operators.VectorOps.lshWeights(dim, planes).map(_.toArray).toArray
+  }
+
+  /** The ORACLE-EXPRESSIBLE family. Murmur weights can only be replayed
+    * as literals — fine while bitsPerBand is fixed, impossible once the
+    * bit width becomes a function of the corpus size (the production
+    * dial: bits ≈ log2(N/64) keeps expected bucket occupancy constant,
+    * so candidate volume grows LINEARLY in N instead of
+    * quadratically). These weights derive from pure integer arithmetic
+    * in (plane, dim) that DuckDB can evaluate inside a lambda for ANY
+    * runtime bit count:
+    *
+    *   p = band·bitsPerBand + bit        (global plane index)
+    *   a(p,i) = (p·31 + i·17 + 7) mod 8191
+    *   w(p,i) = ((a² · (p+13)) mod 8191 mod 2001 − 1000) / 1000.0
+    *
+    * The quadratic a² term mixes plane and dim NON-linearly (a purely
+    * affine family would make every plane a circular shift of the
+    * first — the additive-mixing trap the bootstrap-CI and JL surfaces
+    * hit; see the deterministic-hashing note in the verify skill). All
+    * integer intermediates stay ≤ ~7.4e9 (exact in Long and DuckDB
+    * BIGINT), the division by 1000.0 is exact-to-IEEE on both engines,
+    * and the left-to-right plane dot matches DuckDB's
+    * `list_reduce(list_transform(range(0, dim), ...), (x, y) -> x + y)`
+    * fold exactly (the fold starts at element 0 instead of 0.0 +
+    * element 0, which differs only on the sign of a zero sum —
+    * invisible to the `s >= 0` sign test both sides use). */
+  case object Lin extends LshFamily("lsh_band_keys_lin",
+      "banded LSH bucket keys ('<band>:' + sign bits) from the oracle-expressible " +
+        "integer weight family.") {
+
+    /** The single weight-formula source — mirrored verbatim by the SQL
+      * lambda in [[graft.operators.VectorOps.lshLinKeysSql]]. */
+    def weight(p: Long, i: Long): Double = {
+      val a = (p * 31 + i * 17 + 7) % 8191
+      ((a * a * (p + 13)) % 8191 % 2001 - 1000).toDouble / 1000.0
+    }
+
+    protected def table(dim: Int, planes: Int): Array[Array[Double]] =
+      Array.tabulate(planes, dim)((p, i) => weight(p.toLong, i.toLong))
+  }
 }

@@ -207,9 +207,9 @@ object TextOps {
     * the pair (rank(i), rank(i+2^k)) — lexicographic order of the
     * first 2^(k+1) characters — so the full order resolves in
     * ceil(log2 L) rounds of JOIN + DENSE-RANK instead of comparing
-    * O(L * L) characters. This is the pointer-doubling idea
-    * ([[TreeOps.spanDepths]]) applied to string ordering, and the
-    * building block of suffix-array-based exact-substring dedup (Lee
+    * O(L * L) characters. This is the pointer-doubling idea applied
+    * to string ordering, and the building block of
+    * suffix-array-based exact-substring dedup (Lee
     * et al. 2022 build theirs single-node; the doubling form is how
     * it distributes).
     *
@@ -285,7 +285,7 @@ object TextOps {
     while (!done && k < n) {
       iter += 1
       require(iter <= maxIter, s"suffixArrayRanks did not converge in $maxIter rounds")
-      // QUADRUPLING (the TreeOps lesson): two steps per materialized
+      // QUADRUPLING (the pointer-loop lesson): two steps per materialized
       // round — the intermediate recomputes inside the round's single
       // job, halving the dominant per-round fixed cost at bench scale.
       val next = step(step(r, k), 2 * k).localCheckpoint()

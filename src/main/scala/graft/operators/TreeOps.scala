@@ -3,19 +3,20 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed tree algorithms over the span parent-edge relation.
-  *
-  * The reference materializes each trace's span tree on one node
-  * (reader TraceReader.buildTree / transformers walking parent links);
-  * that caps trace size at single-process memory. Here ancestor
-  * traversal is pointer doubling (a.k.a. pointer jumping): every span
-  * carries a cursor `(anc, dist)` — a known ancestor and the hop count
-  * to it — and each round replaces the cursor with the *ancestor's*
-  * cursor, doubling the distance covered. Depth-D trees finish in
-  * ceil(log2 D) self-joins instead of D level-synchronous ones, so a
-  * pathological 10k-deep trace costs 14 shuffles, not 10k. Lineage is
-  * truncated per round with localCheckpoint (the
-  * GraphOps.connectedComponents pattern) so the plan stays O(1).
+/** Span-tree algorithms over the span parent-edge relation, one
+  * engine: a PER-TRACE walk, as the reference builds each trace's tree
+  * on its own (reader TraceReader.buildTree). Parent links stay inside
+  * the trace — trace assembly groups spans by trace id, and the query
+  * pack's span relation takes each parent as `lag(event_id)` within
+  * the trace — so a trace's rows, gathered in one place
+  * ([[walkGroups]]), hold its whole tree, and each span resolves by a
+  * memoized parent-chain walk in an in-memory map: O(spans) per trace,
+  * trace size bounded by the ingest cap (measured 1060 → ~60 s at
+  * sf100 against pointer-doubling rounds that checkpointed a
+  * corpus-wide cursor per round). Boundary rules shared by both entry
+  * points: a null parent is a root, a parent id absent from the trace
+  * anchors the span (its hop still counts toward depth), and a parent
+  * cycle fails loudly.
   */
 object TreeOps {
 
@@ -64,7 +65,7 @@ object TreeOps {
     *    it entirely. A non-contiguous trace WITHIN a partition fails
     *    loudly (per-partition seen-set); rows of one trace split
     *    ACROSS partitions are the caller's contract, same standing as
-    *    `localParents` itself.
+    *    the in-trace parent contract itself.
     */
   private def walkGroups(pre: DataFrame, outSchema: org.apache.spark.sql.types.StructType,
       contiguous: Boolean)(
@@ -105,104 +106,18 @@ object TreeOps {
     }
   }
 
-  /** Depth (edge count from the root) of every span.
+  /** Depth (edge count from the root) of every span: at most one
+    * trace-keyed shuffle (none under `traceContiguous`, see
+    * [[walkGroups]]), then a memoized parent-chain walk per trace.
     *
-    * Input must carry `span_id` (globally unique), `parent_span_id`
-    * (null at roots; dangling parents are treated as roots' parents —
-    * i.e. a span whose parent id never appears gets the depth of its
-    * known ancestors only). Output: (trace_id, span_id, depth).
-    *
-    * @param maxRounds hard cap on doubling rounds — covers depth up to
-    *                  2^maxRounds; loud failure beyond it rather than a
-    *                  silent wrong answer.
-    * @param localParents set true when parent links never cross trace
-    *                  boundaries and trace size is bounded by the
-    *                  ingest cap (the TraceDataset contract): depths
-    *                  then come from ONE trace-keyed shuffle + a
-    *                  memoized linear local walk (measured 1060 → ~60 s
-    *                  at sf100/100 M spans vs the quadrupling rounds,
-    *                  whose per-round full-corpus checkpoints dominate).
-    *                  Leave false for arbitrary forests.
+    * Input must carry `trace_id`, `span_id` and `parent_span_id`
+    * (null at roots). Roots sit at 0; a span whose parent id is
+    * absent from its trace still pays that hop (the orphan sits at
+    * 1 + its known-ancestor count); a parent cycle fails loudly.
+    * Output: (trace_id, span_id, depth), with the original trace_id/
+    * span_id column types passed through untouched.
     */
-  def spanDepths(spans: DataFrame, maxRounds: Int = 40,
-      localParents: Boolean = false, traceContiguous: Boolean = false): DataFrame = {
-    if (localParents) return spanDepthsLocal(spans, traceContiguous)
-    // The iterated state carries ONLY (span_id, anc, dist): every round
-    // materializes its frontier (localCheckpoint), so each extra
-    // column pays its width × rounds — trace_id (a 16-byte id in
-    // production) rides along zero times and rejoins once at the end.
-    // Cursor init: one hop to the parent, or done (anc null, dist 0).
-    //
-    // FRONTIER SPLIT: after r rounds every span at depth ≤ 2^r is
-    // resolved, so on realistic traces (depth ~10, log-rounds ~4) the
-    // unresolved set collapses geometrically while total rounds are
-    // bounded by the deepest trace. Iterating the full state anyway
-    // re-joins and re-materializes ~N rows × rounds (the dominant cost
-    // at 100 M spans); instead only UNRESOLVED cursors iterate, and
-    // resolved rows retire into per-round checkpointed frames that
-    // still serve as jump targets (an active cursor may point at a
-    // resolved ancestor — the jump-source union covers both). Per-round
-    // materialization is O(|frontier|), join left side shrinks with it.
-    val init = spans.select(
-      col("span_id"),
-      col("parent_span_id").as("anc"),
-      when(col("parent_span_id").isNull, 0L).otherwise(1L).as("dist"))
-      .localCheckpoint()
-    var frontier = init.filter(col("anc").isNotNull).localCheckpoint()
-    var doneFrames = List(init.filter(col("anc").isNull).localCheckpoint())
-    init.unpersist()
-
-    // One cursor jump of `cur` against the cursors in `targets`: active
-    // rows jump to their ancestor's cursor; a dangling anc (parent id
-    // absent from the input) misses the join and resolves to
-    // done-at-current-dist.
-    def jump(cur: DataFrame, targets: Seq[DataFrame]): DataFrame = {
-      val hop = targets.map(_.select(
-        col("span_id").as("h_id"), col("anc").as("h_anc"), col("dist").as("h_dist")))
-        .reduce(_ unionAll _)
-      cur.join(hop, col("anc") === col("h_id"), "left_outer")
-        .select(
-          col("span_id"),
-          col("h_anc").as("anc"),
-          (col("dist") + coalesce(col("h_dist"), lit(0L))).as("dist"))
-    }
-
-    // POINTER QUADRUPLING (r9, the pathRollup lesson): two jumps per
-    // materialized round — the intermediate frame serves as its own
-    // jump target and recomputes inside the round's single job; at the
-    // measured ~0.5 s fixed cost per materialized round, halving the
-    // round count beats halving per-round work.
-    var rounds = 0
-    var active = !frontier.isEmpty
-    while (active && rounds < maxRounds) {
-      val once = jump(frontier, frontier :: doneFrames)
-      val next = jump(once, once :: doneFrames).localCheckpoint()
-      frontier.unpersist()
-      doneFrames = next.filter(col("anc").isNull) :: doneFrames
-      frontier = next.filter(col("anc").isNotNull)
-      rounds += 1
-      active = !frontier.isEmpty
-    }
-    require(!active, s"spanDepths did not converge in $maxRounds quadrupling rounds " +
-      s"(depth > ${BigInt(4).pow(maxRounds)} or a parent cycle)")
-    // NOTE: the round checkpoints stay live — the returned frame reads
-    // the done frames (same contract as GraphOps.connectedComponents:
-    // the caller may unpersist after consuming).
-    val depths = doneFrames.map(_.select(col("span_id"), col("dist").as("depth")))
-      .reduce(_ unionAll _)
-    spans.select(col("trace_id"), col("span_id"))
-      .join(depths, "span_id")
-      .select(col("trace_id"), col("span_id"), col("depth"))
-  }
-
-  /** [[spanDepths]] under the in-trace parent contract: one trace-keyed
-    * shuffle, then each span's depth resolves by a memoized parent-chain
-    * walk — O(spans) per trace. Boundary semantics mirror the doubling
-    * cursor exactly (TreeOpsSpec pins equality): roots (null parent)
-    * at 0, a dangling parent id still costs its hop (the orphan sits at
-    * 1 + its known-ancestor count), a parent cycle fails loudly.
-    * Original trace_id/span_id column types pass through untouched. */
-  private def spanDepthsLocal(spans: DataFrame, traceContiguous: Boolean = false): DataFrame = {
+  def spanDepths(spans: DataFrame, traceContiguous: Boolean = false): DataFrame = {
     import org.apache.spark.sql.{Row}
     import org.apache.spark.sql.types._
     val pre = spans.select(col("trace_id"), col("span_id"), col("parent_span_id"))
@@ -226,7 +141,7 @@ object TreeOps {
           var base = -1L
           while (base < 0 && !memo.contains(cur)) {
             require(inFlight.add(cur),
-              s"spanDepthsLocal: parent cycle at span $cur in trace $tid")
+              s"spanDepths: parent cycle at span $cur in trace $tid")
             chain ::= cur
             par.get(cur) match {
               case Some(p) if present(p) => cur = p
@@ -245,197 +160,32 @@ object TreeOps {
       }
   }
 
-  /** Root→span service PATH of every span — the aggregated-flamegraph
-    * key — by the same pointer-doubling cursor as [[spanDepths]], with
-    * the cursor additionally carrying the SEGMENT of services between
-    * the span and its known ancestor (exclusive): each jump
-    * concatenates the ancestor's segment onto the span's, so a
-    * depth-D chain assembles its path in ceil(log2 D) rounds. A span
-    * whose parent id is absent from the input anchors its fragment
-    * (path starts at itself), mirroring spanDepths' dangling rule.
-    * Output: (trace_id, span_id, path) with path =
-    * 'rootService/…/ownService'.
-    */
-  def spanPaths(spans: DataFrame, maxRounds: Int = 40): DataFrame = {
-    val init = spans.select(
-      col("span_id"),
-      col("parent_span_id").as("anc"),
-      array(col("service")).as("seg"))
-      .localCheckpoint()
-    var frontier = init.filter(col("anc").isNotNull).localCheckpoint()
-    var doneFrames = List(init.filter(col("anc").isNull).localCheckpoint())
-    init.unpersist()
-
-    var rounds = 0
-    var active = !frontier.isEmpty
-    while (active && rounds < maxRounds) {
-      val hop = (frontier :: doneFrames).map(_.select(
-        col("span_id").as("h_id"), col("anc").as("h_anc"), col("seg").as("h_seg")))
-        .reduce(_ unionAll _)
-      val next = frontier.join(hop, col("anc") === col("h_id"), "left_outer")
-        .select(
-          col("span_id"),
-          col("h_anc").as("anc"),
-          when(col("h_seg").isNull, col("seg"))
-            .otherwise(concat(col("seg"), col("h_seg"))).as("seg"))
-        .localCheckpoint()
-      frontier.unpersist()
-      doneFrames = next.filter(col("anc").isNull) :: doneFrames
-      frontier = next.filter(col("anc").isNotNull)
-      rounds += 1
-      active = !frontier.isEmpty
-    }
-    require(!active, s"spanPaths did not converge in $maxRounds doubling rounds " +
-      s"(depth > ${BigInt(2).pow(maxRounds)} or a parent cycle)")
-    val paths = doneFrames
-      .map(_.select(col("span_id"), array_join(reverse(col("seg")), "/").as("path")))
-      .reduce(_ unionAll _)
-    spans.select(col("trace_id"), col("span_id"))
-      .join(paths, "span_id")
-      .select(col("trace_id"), col("span_id"), col("path"))
-  }
-
-  /** Root→span service paths by a PER-TRACE row-local walk — the
-    * opt-in reconstruction engine behind [[pathRollup]]
-    * (localParents = true): replaces a second full doubling loop,
-    * which carried growing segment ARRAYS through ~7 rounds of
-    * join+checkpoint (the dominant cost — measured 13.2 → ~5 s for
-    * the rollup surfaces at sf0.1). Correct ONLY where parent links
-    * stay inside the trace (the TraceDataset contract; a cross-trace
-    * parent id anchors here where the global hop join of
-    * [[spanPaths]] would resolve it) with trace sizes bounded by the
-    * ingest cap: ONE trace-keyed shuffle, then each span walks its
-    * parent links in an in-memory map — O(n·depth) per trace, bounded
-    * by the cap. Dangling parents anchor the path and a parent CYCLE
-    * fails loudly, both exactly like [[spanPaths]] (TreeOpsSpec pins
-    * equality on a trace-local forest).
-    */
-  def spanPathsLocal(spans: DataFrame): DataFrame = {
-    val s = spans.sparkSession
-    import s.implicits._
-    spans.select(col("trace_id").cast("string"), col("span_id").cast("string"),
-        col("parent_span_id").cast("string"), col("service"))
-      .as[(String, String, Option[String], String)]
-      .groupByKey(_._1)
-      .flatMapGroups { (tid, it) =>
-        val rows = it.toArray
-        val svc = new scala.collection.mutable.HashMap[String, String]()
-        val par = new scala.collection.mutable.HashMap[String, String]()
-        rows.foreach { case (_, sid, p, sv) =>
-          svc.update(sid, sv)
-          p.foreach(par.update(sid, _))
-        }
-        rows.iterator.map { case (_, sid, _, _) =>
-          val seg = List.newBuilder[String]
-          val seen = new scala.collection.mutable.HashSet[String]()
-          var cur = sid
-          var done = false
-          while (!done) {
-            require(seen.add(cur),
-              s"spanPathsLocal: parent cycle at span $cur in trace $tid")
-            seg += svc(cur)
-            par.get(cur).filter(svc.contains) match {
-              case Some(p) => cur = p
-              case None => done = true
-            }
-          }
-          (tid, sid, seg.result().reverse.mkString("/"))
-        }
-      }
-      .toDF("trace_id", "span_id", "path")
-  }
-
-  /** Path rollup that never shuffles a path string for the bulk corpus.
+  /** Aggregated root→span service-path rollup — the flamegraph view —
+    * in ONE pass: one corpus scan, at most one trace-keyed shuffle
+    * (none under `traceContiguous`), one map-combined aggregate. The
+    * walk ([[pathRollupLocal]]) emits a fixed-width path fingerprint
+    * per span plus the path STRING exactly once per distinct
+    * (fingerprint, groupVals) per trace, so `min(path)` — which
+    * ignores the bulk nulls and collapses map-side — reconstructs
+    * every group's string with no second scan or join.
     *
-    * [[spanPaths]] carries each span's accumulated service-segment
-    * ARRAY through every doubling round; at sf100 (100 M spans,
-    * 99-deep chains) those variable-width rows blew the machine's
-    * 250 GB of checkpoint+spill disk (measured, end of round 8). The
-    * scale shape is the classic fingerprint-then-reconstruct split:
+    * `groupCols`: extra per-span columns grouped alongside the path —
+    * the differential-flamegraph hook (e.g. a time-half flag).
     *
-    *   1. the doubling cursor carries a FIXED-WIDTH path fingerprint —
-    *      a polynomial rolling hash h(seq) = Σ h(seg_i)·B^i over the
-    *      self→root segment sequence, which composes under cursor
-    *      jumps exactly like concatenation: (h,b) ⊕ (h',b') =
-    *      (h + b·h' mod p, b·b' mod p). Two independent 31-bit prime
-    *      moduli keep every product inside ANSI-safe long range and
-    *      push the collision bound to ~k²/2^61 for k distinct paths;
-    *   2. per-fingerprint aggregates (count, Σduration, min
-    *      (trace_id, span_id) representative) collapse the corpus;
-    *   3. path STRINGS are reconstructed by running [[spanPaths]] only
-    *      on the representatives' traces — |distinct paths| traces, a
-    *      constant-size relation independent of corpus scale.
-    *
-    * Output: (path, n_spans, total_dur_us), one row per distinct
-    * root→self service path. Input must carry trace_id, span_id,
-    * parent_span_id, service, duration_us.
+    * Input must carry trace_id, span_id, parent_span_id, service,
+    * duration_us (+ groupCols). Output: (path, groupCols…, n_spans,
+    * total_dur_us), one row per distinct root→self service path and
+    * group.
     */
-  /** `groupCols`: extra fixed-width per-span columns carried through
-    * the cursor and grouped alongside the path fingerprint — the
-    * differential-flamegraph hook (e.g. a time-half flag). They ride
-    * every checkpoint, so keep them narrow (the spanDepths width
-    * lesson). */
-  /** `localParents`: set true when the input guarantees parent links
-    * never cross trace boundaries (the TraceDataset contract, true of
-    * every span relation the query pack builds) — the whole rollup
-    * then runs SINGLE-PASS: one corpus scan, one trace-keyed shuffle,
-    * one map-combined aggregate ([[pathRollupLocal]]); no source
-    * checkpoint, no reconstruction join (at sf100 the 100 M-row
-    * checkpoint write+read and the second/third source scans were the
-    * measured disk-traffic pole — 96–509 s run swings, r10 verdict).
-    * Leave false for arbitrary forests (e.g. cross-trace parent ids),
-    * where only the global hop join is correct. */
-  /** `srcMaterialized`: set true when `spans` is already a cheap read
-    * (the caller checkpointed it) — skips the doubling branch's
-    * internal checkpoint. Irrelevant under `localParents`, whose
-    * single-pass plan scans the input exactly once. */
-  def pathRollup(spans: DataFrame, maxRounds: Int = 40,
-      groupCols: Seq[String] = Nil, localParents: Boolean = false,
-      srcMaterialized: Boolean = false, traceContiguous: Boolean = false): DataFrame = {
-    val srcRaw = spans.select(
+  def pathRollup(spans: DataFrame, groupCols: Seq[String] = Nil,
+      traceContiguous: Boolean = false): DataFrame = {
+    val src = spans.select(
       (Seq(col("trace_id"), col("span_id"), col("parent_span_id"),
         col("service"), col("duration_us")) ++ groupCols.map(col)): _*)
-
-    if (localParents) {
-      // At most one trace-keyed shuffle (ZERO under traceContiguous —
-      // see [[walkGroups]]); the walk emits a fixed-width fingerprint
-      // per span plus the path STRING exactly once per distinct
-      // (ph, groupVals) per trace, so min(path) — which ignores the
-      // bulk nulls and collapses map-side — reconstructs every
-      // group's string with zero extra scans or joins. The null
-      // string slot costs 8 bytes/row in the walk output vs the
-      // full re-scan + semi-join reconstruction it replaces.
-      return pathRollupLocal(srcRaw, groupCols, traceContiguous)
-        .groupBy("ph", groupCols: _*)
-        .agg(min("path").as("path"), count(lit(1)).as("n_spans"),
-          sum("duration_us").as("total_dur_us"))
-        .select((Seq(col("path")) ++ groupCols.map(col) ++
-          Seq(col("n_spans"), col("total_dur_us"))): _*)
-    }
-
-    // Arbitrary-forest branch: the input is scanned twice (cursor init
-    // + representative-trace reconstruction); checkpoint the narrow
-    // projection ONCE so an expensive upstream is never recomputed.
-    val src = if (srcMaterialized) srcRaw else srcRaw.localCheckpoint()
-    val fps = pathHashesDoubling(src, groupCols, maxRounds)
-
-    // Corpus collapses on the combined 62-bit fingerprint; one
-    // representative span per path seeds the string reconstruction.
-    val roll = fps
+    pathRollupLocal(src, groupCols, traceContiguous)
       .groupBy("ph", groupCols: _*)
-      .agg(count(lit(1)).as("n_spans"), sum("duration_us").as("total_dur_us"),
-        min(struct(col("trace_id"), col("span_id"))).as("rep"))
-      .localCheckpoint()
-
-    // Reconstruct strings on the representatives' traces only —
-    // |distinct paths| traces regardless of corpus size.
-    val repTraces = roll.select(col("rep.trace_id").as("trace_id")).distinct()
-    val pruned = src
-      .select("trace_id", "span_id", "parent_span_id", "service")
-      .join(broadcast(repTraces), Seq("trace_id"), "left_semi")
-    val repPaths = spanPaths(pruned, maxRounds)
-      .select(col("span_id").as("rep_span"), col("path"))
-    roll.join(repPaths, roll("rep.span_id").cast("string") === col("rep_span"))
+      .agg(min("path").as("path"), count(lit(1)).as("n_spans"),
+        sum("duration_us").as("total_dur_us"))
       .select((Seq(col("path")) ++ groupCols.map(col) ++
         Seq(col("n_spans"), col("total_dur_us"))): _*)
   }
@@ -447,26 +197,19 @@ object TreeOps {
   private val (fpP1, fpP2) = (2147483647L, 2147483629L)
   private val (fpB1, fpB2) = (1000003L, 998244353L)
 
-  /** Per-span path fingerprints PLUS inline path strings by ONE
-    * trace-keyed shuffle + a linear local walk — the
-    * [[spanPathsLocal]] engine emitting fixed-width hash pairs for
-    * every span and the path STRING only on the first occurrence of
-    * each (ph, groupVals) within the trace, so the shuffled frame
-    * stays narrow (one 8-byte null slot on bulk rows) while the
-    * downstream `min(path)` aggregate reconstructs every group's
-    * string with no second source scan. Valid under the same contract
-    * (parent links stay in-trace, trace size bounded by the ingest
-    * cap): per-group work is O(spans) via memoized parent-chain
-    * resolution + O(depth) per distinct path for the one-off string
-    * builds. Dangling parents anchor and a parent cycle fails loudly,
-    * exactly like the doubling cursor. Ids stay in their ORIGINAL
-    * types through the shuffle; the local maps key on canonical forms
-    * (binary ids content-compare, null trace ids take a reserved
-    * group — see [[groupKey]]/[[idKey]]). Output: (ph, duration_us,
-    * groupCols…, path|null).
+  /** Per-span path fingerprints PLUS inline path strings by one
+    * per-trace walk: fixed-width hash pairs for every span and the
+    * path STRING only on the first occurrence of each (ph, groupVals)
+    * within the trace, so the walk output stays narrow (one 8-byte
+    * null slot on bulk rows). Per-trace work is O(spans) via memoized
+    * parent-chain resolution + O(depth) per distinct path for the
+    * one-off string builds. Ids stay in their ORIGINAL types; the
+    * local maps key on canonical forms (binary ids content-compare,
+    * null trace ids take a reserved group — see [[groupKey]]/
+    * [[idKey]]). Output: (ph, duration_us, groupCols…, path|null).
     */
   private def pathRollupLocal(src: DataFrame, groupCols: Seq[String],
-      traceContiguous: Boolean = false): DataFrame = {
+      traceContiguous: Boolean): DataFrame = {
     import org.apache.spark.sql.{Row}
     import org.apache.spark.sql.types._
     val pre = src.select(
@@ -541,77 +284,5 @@ object TreeOps {
           Row.fromSeq((Seq(ph, r.get(5)) ++ gvals) :+ path)
         }
       }
-  }
-
-  /** Per-span path fingerprints by the pointer-quadrupling cursor —
-    * correct for arbitrary forests (cross-trace parent ids, unbounded
-    * traces). The cursor is FIXED-WIDTH ((span_id, anc, h1, b1, h2,
-    * b2) plus the rollup payload) and composes under jumps exactly
-    * like concatenation: (h,b) ⊕ (h',b') = (h + b·h' mod p, b·b' mod
-    * p). Two jumps per materialized round — the intermediate
-    * (distance-doubled) frame serves as its own jump target and
-    * recomputes inside the round's single job; at the measured
-    * ~0.5 s fixed cost per materialized round, halving the round
-    * count beats halving per-round work (sf0.1: 7 rounds × 0.6 s →
-    * 4 rounds).
-    */
-  private def pathHashesDoubling(
-      src: DataFrame, groupCols: Seq[String], maxRounds: Int): DataFrame = {
-    val (p1, p2) = (fpP1, fpP2)
-    val (bb1, bb2) = (fpB1, fpB2)
-    // Cursor: (span_id, anc, h1, b1, h2, b2) + the fixed-width payload
-    // the rollup needs (trace_id, duration) so no corpus-wide rejoin.
-    val init = src.select(
-      (Seq(col("trace_id"), col("span_id"), col("duration_us"),
-        col("parent_span_id").as("anc"),
-        pmod(xxhash64(col("service")), lit(p1)).as("h1"), lit(bb1).as("b1"),
-        pmod(xxhash64(lit("graft-fp2"), col("service")), lit(p2)).as("h2"),
-        lit(bb2).as("b2")) ++ groupCols.map(col)): _*)
-      .localCheckpoint()
-    var frontier = init.filter(col("anc").isNotNull).localCheckpoint()
-    var doneFrames = List(init.filter(col("anc").isNull).localCheckpoint())
-    init.unpersist()
-
-    // One fingerprint-composing jump of `cur` against the cursors in
-    // `targets`: a dangling anc misses the join and anchors the path
-    // (same rule as spanDepths/spanPaths).
-    def jump(cur: DataFrame, targets: Seq[DataFrame]): DataFrame = {
-      val hop = targets.map(_.select(
-        col("span_id").as("h_id"), col("anc").as("h_anc"),
-        col("h1").as("y1"), col("b1").as("c1"),
-        col("h2").as("y2"), col("b2").as("c2")))
-        .reduce(_ unionAll _)
-      cur.join(hop, col("anc") === col("h_id"), "left_outer")
-        .select(
-          (Seq(col("trace_id"), col("span_id"), col("duration_us"),
-            col("h_anc").as("anc"),
-            when(col("y1").isNull, col("h1"))
-              .otherwise(pmod(col("h1") + col("b1") * col("y1"), lit(p1))).as("h1"),
-            when(col("y1").isNull, col("b1"))
-              .otherwise(pmod(col("b1") * col("c1"), lit(p1))).as("b1"),
-            when(col("y2").isNull, col("h2"))
-              .otherwise(pmod(col("h2") + col("b2") * col("y2"), lit(p2))).as("h2"),
-            when(col("y2").isNull, col("b2"))
-              .otherwise(pmod(col("b2") * col("c2"), lit(p2))).as("b2")) ++
-            groupCols.map(cur(_))): _*)
-    }
-
-    var rounds = 0
-    var active = !frontier.isEmpty
-    while (active && rounds < maxRounds) {
-      val once = jump(frontier, frontier :: doneFrames)
-      val next = jump(once, once :: doneFrames).localCheckpoint()
-      frontier.unpersist()
-      doneFrames = next.filter(col("anc").isNull) :: doneFrames
-      frontier = next.filter(col("anc").isNotNull)
-      rounds += 1
-      active = !frontier.isEmpty
-    }
-    require(!active, s"pathRollup did not converge in $maxRounds quadrupling rounds " +
-      s"(depth > ${BigInt(4).pow(maxRounds)} or a parent cycle)")
-    doneFrames
-      .map(_.select((Seq((col("h1") * p2 + col("h2")).as("ph"), col("trace_id"),
-        col("span_id"), col("duration_us")) ++ groupCols.map(col)): _*))
-      .reduce(_ unionAll _)
   }
 }

@@ -1083,11 +1083,11 @@ object VectorOps {
       .mkString("CASE ", " ", " ELSE 16 END")
 
   /** DuckDB CTE fragment computing per-(vec_id, band) keys of the
-    * [[graft.functions.LshBandKeysLin]] family with a RUNTIME bit
+    * [[graft.functions.LshFamily.Lin]] weight family with a RUNTIME bit
     * width: expects upstream CTEs `n(vec_id, v, ...)` (v DOUBLE[dim])
     * and `k(bits BIGINT)`; emits `keys(vec_id, band, bkey)`. The
     * weight lambda is the verbatim SQL mirror of
-    * [[graft.functions.LshBandKeysLin.weight]]; the fold is
+    * [[graft.functions.LshFamily.Lin.weight]]; the fold is
     * `list_reduce(..., (x, y) -> x + y)` = the expression's
     * left-to-right accumulation (see its scaladoc for the signed-zero
     * note). */

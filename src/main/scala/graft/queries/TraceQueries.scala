@@ -1312,18 +1312,15 @@ object TraceQueries {
         |  CAST((doc_id * 7) % 256 AS BIGINT) AS b
         |FROM d ORDER BY media_id""".stripMargin),
 
-    // Span-tree depth (graft.operators.TreeOps.spanDepths). Under the
-    // in-trace parent contract the registered surface resolves depths
-    // with ONE trace-keyed shuffle + a memoized local walk (measured
-    // 1060 → ~60 s at sf100: the pointer-quadrupling rounds each
-    // checkpoint a corpus-wide cursor, and 100 M spans × 4 rounds is
-    // all I/O); the doubling cursor remains the arbitrary-forest path
-    // (cross-trace parents, unbounded traces — ceil(log2 depth)
-    // self-join rounds vs the reference's single-node
-    // TraceReader.buildTree walk), spec-pinned equal on trace-local
-    // forests. The oracle is a genuine recursive traversal (WITH
-    // RECURSIVE over the parent edges), so the hash match proves the
-    // walk lands on the true edge distance for every span.
+    // Span-tree depth (graft.operators.TreeOps.spanDepths): the
+    // per-trace memoized walk, the reference's TraceReader.buildTree
+    // shape — parent links stay inside the trace, so each trace's tree
+    // resolves on its own (measured 1060 → ~60 s at sf100 against the
+    // earlier pointer-quadrupling rounds, whose per-round corpus-wide
+    // checkpoints were all I/O). The oracle is a genuine recursive
+    // traversal (WITH RECURSIVE over the parent edges), so the hash
+    // match proves the walk lands on the true edge distance for every
+    // span.
     "trace_depth" -> QueryDef.sql(
       // no trailing global sort: one depth row per span at corpus
       // scale, set-compared by the gate — ordering all spans would be
@@ -1331,7 +1328,7 @@ object TraceQueries {
       (s, dir) => graft.operators.TreeOps.spanDepths(spans(s, dir),
         // traceContiguous: the events->spans window co-locates and
         // block-orders each trace, so the walk runs exchange-free
-        localParents = true, traceContiguous = true),
+        traceContiguous = true),
       // RECURSIVE must be declared on the whole WITH list in DuckDB,
       // so this oracle rewrites the shared spans prefix instead of
       // using cte().
@@ -1725,7 +1722,7 @@ object TraceQueries {
     // (operators/TropicalScan): each hour is a 2×2 min-plus matrix
     // and the product is associative, so a month folds in ceil(log2
     // H) pairwise-merge rounds instead of H chained steps — the
-    // trace_depth doubling idea applied to dynamic programming.
+    // pointer-doubling idea applied to dynamic programming.
     // Emissions |n − mean| / |n − 2·mean| and the switch penalty
     // mean/4 are exact integers; the oracle re-runs the DP
     // SEQUENTIALLY in a recursive CTE, so the hash match proves the
@@ -1884,11 +1881,10 @@ object TraceQueries {
     // Aggregated path rollup (C74) — the flamegraph/deep-dependency
     // view: every span keyed by its root→self service PATH, rolled up
     // to (path, n_spans, total_dur_us). TreeOps.pathRollup: the
-    // doubling cursor carries a FIXED-WIDTH dual-prime polynomial
-    // fingerprint of the path (composes under jumps like
-    // concatenation), the corpus collapses per fingerprint, and path
-    // STRINGS are reconstructed only for one representative trace per
-    // distinct path — the spanPaths string-accumulating form blew
+    // per-trace walk gives each span a FIXED-WIDTH dual-prime
+    // polynomial fingerprint of its path, the corpus collapses per
+    // fingerprint, and each path STRING is built once per trace where
+    // it first occurs — a cursor accumulating segment strings blew
     // 250 GB of spill disk at sf100 (measured; BASELINE.md). The
     // oracle walks paths with a genuine recursive CTE, so the hash
     // match proves fingerprint composition lands every span on its
@@ -1897,12 +1893,9 @@ object TraceQueries {
     "trace_path_rollup" -> QueryDef.sql(
       (s, dir) => {
         val sp = spans(s, dir)
-        // localParents: the events-derived span relation keeps parent
-        // links inside the trace by construction (SpanOps chain), so
-        // reconstruction is the one-shuffle per-trace walk
         graft.operators.TreeOps.pathRollup(
           sp.select("trace_id", "span_id", "parent_span_id", "service",
-            "duration_us"), localParents = true, traceContiguous = true)
+            "duration_us"), traceContiguous = true)
       },
       cte("""
         |, p AS (
@@ -1923,12 +1916,11 @@ object TraceQueries {
     // performance regression hunt starts from): per root→self service
     // path, span count and total duration in each half, new/removed/
     // kept status, and the duration ratio in exact ppm. Built on the
-    // SAME fingerprint-doubling cursor (TreeOps.pathRollup) with the
-    // half flag carried as a fixed-width groupCol through every
-    // checkpoint — the r8 disk-exhaustion lesson says payloads must
-    // stay narrow, and one long rides free. Midpoint = 1-row
-    // broadcast (the trace_graph_diff idiom); no trailing sort (one
-    // row per distinct path — the driver set-compares).
+    // SAME per-trace path walk (TreeOps.pathRollup) with the half flag
+    // as a fixed-width groupCol — the r8 disk-exhaustion lesson says
+    // payloads must stay narrow, and one long rides free. Midpoint =
+    // 1-row broadcast (the trace_graph_diff idiom); no trailing sort
+    // (one row per distinct path — the driver set-compares).
     "trace_flamegraph_diff" -> QueryDef.sql(
       (s, dir) => {
         // ZERO corpus materializations (the r10 sf100 disk-traffic
@@ -1946,7 +1938,7 @@ object TraceQueries {
           .select("trace_id", "span_id", "parent_span_id", "service",
             "duration_us", "half")
         val roll = graft.operators.TreeOps.pathRollup(flagged,
-          groupCols = Seq("half"), localParents = true, traceContiguous = true)
+          groupCols = Seq("half"), traceContiguous = true)
         roll.groupBy("path")
           .agg(
             sum(when(col("half") === 0L, col("n_spans")).otherwise(0L)).as("spans_a"),

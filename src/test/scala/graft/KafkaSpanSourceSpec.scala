@@ -112,7 +112,7 @@ class KafkaSpanSourceSpec extends AnyFunSpec with Matchers with SparkTestBase {
         Seq(span("t1", "a", t0), span("t1", "b", t0 + 1000000L)),
         Seq(span("t2", "x", t0 + 2000000L), span("t1", "c", t0 + 3000000L)),
         Seq(span("t9", "z", t0 + 600000000L))) // watermark driver
-      val root = java.nio.file.Files.createTempDirectory("graft_kafka_replay").toString
+      val root = Scratch.fresh("graft_kafka_replay")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
       batches.zipWithIndex.foreach { case (b, i) =>

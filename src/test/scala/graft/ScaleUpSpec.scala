@@ -12,7 +12,7 @@ import org.scalatest.matchers.should.Matchers
 class ScaleUpSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
   private lazy val outDir = {
-    val dir = java.nio.file.Files.createTempDirectory("scaleup-spec").toString
+    val dir = Scratch.fresh("scaleup-spec")
     // run the main in-process on the shared session's tables
     ScaleUp.main(Array(sfDir, dir, "2"))
     dir

@@ -22,9 +22,17 @@ class ScratchSpec extends AnyFunSpec with Matchers with SparkTestBase {
     files(df).map(f => root.resolve(root.relativize(f).getName(0))).toSet
 
   describe("temp directories") {
+    // a JDK temp directory or file made anywhere but Scratch outlives
+    // the JVM: no shutdown hook deletes it
+    val tempCall = "createTemp(Directory|File)\\("
+
     it("are created only by Scratch in the main sources") {
-      SourceLint.sites("main", "createTempDirectory")
+      SourceLint.sites("main", tempCall)
         .map(_.getFileName.toString).distinct shouldBe List("Scratch.scala")
+    }
+
+    it("are created only through Scratch in the test sources, temp files included") {
+      SourceLint.sites("test", tempCall) shouldBe empty
     }
 
     it("hold the default index store and streaming sinks under the one root") {

@@ -55,7 +55,7 @@ class SpanBufferStreamSpec extends AnyFunSpec with Matchers with SparkTestBase {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       val t0 = 1704067200000000L
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sink")
+      val tmp = Scratch.fresh("graft_stream_sink")
       val input = MemoryStream[Span]
       val q = SpanBufferStream.assemble(input.toDS(), gapSeconds = 60, maxSpans = 100)
         .select(col("traceId").as("trace_id"),

@@ -26,7 +26,7 @@ class StreamRestartSpec extends AnyFunSpec with Matchers with SparkTestBase {
   it("resumes offsets and buffer state across stream restarts") {
     val s = spark
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val base = Scratch.fresh("graft_restart")
     val (srcDir, ckpt, outDir) = (s"$base/src", s"$base/ckpt", s"$base/out")
 
     def addFile(spans: Seq[Span]): Unit =

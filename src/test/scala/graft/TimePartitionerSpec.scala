@@ -26,7 +26,7 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
   }
 
   private def written(spans: DataFrame, hourly: Boolean): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tp_window").toString
+    val dir = Scratch.fresh("graft_tp_window")
     TimePartitioner.writePartitioned(spans, dir, hourly)
     dir
   }
@@ -52,7 +52,7 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
   }
 
   private lazy val outDir = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tp_spec").toString
+    val dir = Scratch.fresh("graft_tp_spec")
     TimePartitioner.writePartitioned(SpanOps.spansFromEvents(Tables.events(spark, sfDir)), dir)
     dir
   }
@@ -69,7 +69,7 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
       // the dim must be a real scan with a live Filter node — a local
       // Seq constant-folds into a LocalTableScan and the pruning rule
       // sees no selective predicate to piggyback on
-      val dimDir = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
+      val dimDir = Scratch.fresh("graft_dpp_dim")
       Seq(("2024-01-01", 0), ("2024-01-02", 0), ("2024-01-03", 1))
         .toDF("dt", "quarantined").write.mode("overwrite").parquet(dimDir)
       val wanted = s.read.parquet(dimDir).filter($"quarantined" === 0)
@@ -102,7 +102,7 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
     it("expire drops exactly the partitions older than the cutoff, no scan") {
       // fresh layout so dropping doesn't disturb the shared one
-      val dir = java.nio.file.Files.createTempDirectory("graft_tp_expire").toString
+      val dir = Scratch.fresh("graft_tp_expire")
       TimePartitioner.writePartitioned(
         SpanOps.spansFromEvents(Tables.events(spark, sfDir)), dir, hourly = false)
       val before = new java.io.File(dir).listFiles().count(_.getName.startsWith("dt="))
@@ -121,7 +121,7 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
     it("compact merges small files per partition without changing the data") {
       import org.apache.spark.sql.functions.sum
-      val dir = java.nio.file.Files.createTempDirectory("graft_tp_compact").toString
+      val dir = Scratch.fresh("graft_tp_compact")
       // fragment the layout: 8 writers per partition = 8 small files
       TimePartitioner.writePartitioned(
         SpanOps.spansFromEvents(Tables.events(spark, sfDir)).repartition(8),
@@ -148,7 +148,7 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
     it("compact recovers a crash between delete and rename without losing data") {
       import org.apache.spark.sql.functions.sum
-      val dir = java.nio.file.Files.createTempDirectory("graft_tp_crash").toString
+      val dir = Scratch.fresh("graft_tp_crash")
       TimePartitioner.writePartitioned(
         SpanOps.spansFromEvents(Tables.events(spark, sfDir)).repartition(8),
         dir, hourly = false)
@@ -179,7 +179,7 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
     it("compact quarantines a tmp whose name is not a valid sibling partition") {
       import org.apache.spark.sql.functions.sum
-      val dir = java.nio.file.Files.createTempDirectory("graft_tp_orphan").toString
+      val dir = Scratch.fresh("graft_tp_orphan")
       TimePartitioner.writePartitioned(
         SpanOps.spansFromEvents(Tables.events(spark, sfDir)), dir, hourly = false)
       val before = spark.read.parquet(dir)
@@ -213,7 +213,7 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
     it("compact recovers a new-style ~e-encoded interrupted swap") {
       import org.apache.spark.sql.functions.sum
-      val dir = java.nio.file.Files.createTempDirectory("graft_tp_newenc").toString
+      val dir = Scratch.fresh("graft_tp_newenc")
       TimePartitioner.writePartitioned(
         SpanOps.spansFromEvents(Tables.events(spark, sfDir)), dir, hourly = false)
       val before = spark.read.parquet(dir)
@@ -238,7 +238,7 @@ class TimePartitionerSpec extends AnyFunSpec with Matchers with SparkTestBase {
     }
 
     it("compact reaches the hourly layout's hr= leaves") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_tp_compact_hr").toString
+      val dir = Scratch.fresh("graft_tp_compact_hr")
       TimePartitioner.writePartitioned(
         SpanOps.spansFromEvents(Tables.events(spark, sfDir)).repartition(6),
         dir, hourly = true)

@@ -21,7 +21,7 @@ class TraceStoreWriterSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
   describe("TraceStoreWriter") {
     it("materializes all three store layouts from one span relation") {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_store").toString
+      val tmp = Scratch.fresh("graft_store")
       val layout = TraceStoreWriter.StoreLayout(
         bucketTable = "graft_spans_spec", buckets = 8,
         indexDir = s"$tmp/index", metaDir = s"$tmp/meta", hourly = false)
@@ -39,7 +39,7 @@ class TraceStoreWriterSpec extends AnyFunSpec with Matchers with SparkTestBase {
     it("streaming fan-out lands three consistent sinks per micro-batch") {
       val s = spark
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_store_stream").toString
+      val tmp = Scratch.fresh("graft_store_stream")
       // a real file-source stream over events, like the driver queries use
       val batchSchema = Tables.events(s, sfDir).schema
       val stream = s.readStream.schema(batchSchema)

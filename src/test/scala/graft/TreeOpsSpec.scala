@@ -17,6 +17,14 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
       .map(r => r.getLong(1) -> r.getLong(2)).toMap
   }
 
+  /** Driver-side references over one trace's (span → parent) map: a
+    * parent absent from the map anchors the span and still costs its
+    * hop toward depth. */
+  private def refDepth(par: Map[Long, Option[Long]])(i: Long): Long =
+    par(i).fold(0L)(p => if (par.contains(p)) refDepth(par)(p) + 1L else 1L)
+  private def refPath(par: Map[Long, Option[Long]], svc: Map[Long, String])(i: Long): String =
+    par(i).filter(par.contains).fold(svc(i))(p => refPath(par, svc)(p) + "/" + svc(i))
+
   describe("spanDepths") {
     it("computes depth on a branching tree with multiple roots") {
       //   1            10
@@ -28,21 +36,6 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         1L -> None, 2L -> Some(1L), 3L -> Some(1L), 4L -> Some(3L),
         10L -> None, 11L -> Some(10L))
       out shouldBe Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 10L -> 0L, 11L -> 1L)
-    }
-
-    it("resolves a 300-deep chain within the log2 doubling bound") {
-      val chain: Seq[(Long, Option[Long])] =
-        (0L until 300L).map(i => i -> (if (i == 0) None else Some(i - 1)))
-      // depth 299 < 2^9: must converge given only 9 doubling rounds
-      val s = spark
-      import s.implicits._
-      val df = chain.map { case (id, p) => ("t", id, p) }
-        .toDF("trace_id", "span_id", "parent_span_id")
-      val out = TreeOps.spanDepths(df, maxRounds = 9).collect()
-        .map(r => r.getLong(1) -> r.getLong(2)).toMap
-      out(0L) shouldBe 0L
-      out(299L) shouldBe 299L
-      out(150L) shouldBe 150L
     }
 
     it("treats a dangling parent as the traversal boundary") {
@@ -64,20 +57,16 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
             i -> (if (i == 0 || rng.nextDouble() < 0.1) None
                   else Some(rng.nextLong(i)))
           }.toMap
-        def refDepth(i: Long): Long = parents(i) match {
-          case None => 0L
-          case Some(p) => refDepth(p) + 1L
-        }
         val df = parents.toSeq.map { case (id, p) => ("t", id, p) }
           .toDF("trace_id", "span_id", "parent_span_id")
         val got = TreeOps.spanDepths(df).collect()
           .map(r => r.getLong(1) -> r.getLong(2)).toMap
         got.keySet shouldBe parents.keySet
-        got.foreach { case (id, d) => d shouldBe refDepth(id) }
+        got.foreach { case (id, d) => d shouldBe refDepth(parents)(id) }
       }
     }
 
-    it("localParents walk equals the doubling cursor on a trace-local forest") {
+    it("walk matches the driver-side reference on a trace-local forest with dangling parents") {
       val s = spark
       import s.implicits._
       val rng = new scala.util.Random(23)
@@ -95,13 +84,15 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         }
       }
       val df = rows.toDF("trace_id", "span_id", "parent_span_id")
-      def depths(local: Boolean) =
-        TreeOps.spanDepths(df, localParents = local).collect()
-          .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val local = depths(local = true)
-      local shouldBe depths(local = false)
-      local(("t0", 0L)) shouldBe 0L // root
-      local(("t0", 1L)) shouldBe 1L // dangling parent still costs its hop
+      val got = TreeOps.spanDepths(df).collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val expected = rows.groupBy(_._1).flatMap { case (t, rs) =>
+        val par = rs.map(r => r._2 -> r._3).toMap
+        rs.map(r => (t, r._2) -> refDepth(par)(r._2))
+      }
+      got shouldBe expected
+      got(("t0", 0L)) shouldBe 0L // root
+      got(("t0", 1L)) shouldBe 1L // dangling parent still costs its hop
     }
 
     it("localParents walk groups binary ids by content, not identity") {
@@ -117,7 +108,7 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         (tid(), sid(2), Option(sid(1))),
         (tid(), sid(3), Option(sid(2))))
         .toDF("trace_id", "span_id", "parent_span_id")
-      val out = TreeOps.spanDepths(df, localParents = true).collect()
+      val out = TreeOps.spanDepths(df).collect()
         .map(r => r.getAs[Array[Byte]](1)(0) -> r.getLong(2)).toMap
       out shouldBe Map(1.toByte -> 0L, 2.toByte -> 1L, 3.toByte -> 2L)
     }
@@ -134,7 +125,7 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         (Option("null"), 1L, Option.empty[Long]),
         (Option("null"), 3L, Option(2L))) // 2 exists only in the null trace
         .toDF("trace_id", "span_id", "parent_span_id")
-      val out = TreeOps.spanDepths(df, localParents = true).collect()
+      val out = TreeOps.spanDepths(df).collect()
         .map(r => (Option(r.getString(0)), r.getLong(1)) -> r.getLong(2)).toMap
       out((None, 2L)) shouldBe 1L
       // span 3's parent 2 is ABSENT from trace "null": dangling => depth 1
@@ -156,7 +147,7 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         .repartition(3, org.apache.spark.sql.functions.col("trace_id"))
         .sortWithinPartitions("trace_id")
       def depths(contig: Boolean) =
-        TreeOps.spanDepths(df, localParents = true, traceContiguous = contig)
+        TreeOps.spanDepths(df, traceContiguous = contig)
           .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       depths(contig = true) shouldBe depths(contig = false)
     }
@@ -171,7 +162,7 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         ("ta", 3L, Option(1L)))
         .toDF("trace_id", "span_id", "parent_span_id").coalesce(1)
       val ex = intercept[org.apache.spark.SparkException] {
-        TreeOps.spanDepths(df, localParents = true, traceContiguous = true).collect()
+        TreeOps.spanDepths(df, traceContiguous = true).collect()
       }
       ex.getMessage should include("contiguity")
     }
@@ -182,89 +173,48 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
       val df = Seq(("t", 1L, Some(2L)), ("t", 2L, Some(1L)))
         .toDF("trace_id", "span_id", "parent_span_id")
       val ex = intercept[org.apache.spark.SparkException] {
-        TreeOps.spanDepths(df, localParents = true).collect()
+        TreeOps.spanDepths(df).collect()
       }
       ex.getMessage should include("parent cycle")
     }
-
-    it("fails loudly on a parent cycle instead of spinning") {
-      val s = spark
-      import s.implicits._
-      val df = Seq(("t", 1L, Some(2L)), ("t", 2L, Some(1L)))
-        .toDF("trace_id", "span_id", "parent_span_id")
-      val ex = intercept[IllegalArgumentException] {
-        TreeOps.spanDepths(df, maxRounds = 5).collect()
-      }
-      ex.getMessage should include("did not converge")
-    }
   }
 
-  describe("spanPaths") {
-    /** (span_id, parent, service) rows, one trace. */
-    def paths(rows: (Long, Option[Long], String)*): Map[Long, String] = {
+  describe("pathRollup") {
+    /** (span_id, parent, service) rows, one trace → the rolled-up
+      * path → n_spans map. */
+    def paths(rows: (Long, Option[Long], String)*): Map[String, Long] = {
       val s = spark
       import s.implicits._
-      val df = rows.toSeq.map { case (id, p, svc) => ("t", id, p, svc) }
-        .toDF("trace_id", "span_id", "parent_span_id", "service")
-      TreeOps.spanPaths(df).collect()
-        .map(r => r.getLong(1) -> r.getString(2)).toMap
+      val df = rows.toSeq.map { case (id, p, svc) => ("t", id, p, svc, 1L) }
+        .toDF("trace_id", "span_id", "parent_span_id", "service", "duration_us")
+      TreeOps.pathRollup(df).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
     }
 
     it("assembles root-to-span paths on a branching tree") {
       val out = paths(
         (1L, None, "api"), (2L, Some(1L), "auth"), (3L, Some(1L), "db"),
-        (4L, Some(3L), "cache"), (10L, None, "web"))
+        (4L, Some(3L), "cache"), (10L, None, "web"), (11L, Some(1L), "db"))
       out shouldBe Map(
-        1L -> "api", 2L -> "api/auth", 3L -> "api/db",
-        4L -> "api/db/cache", 10L -> "web")
+        "api" -> 1L, "api/auth" -> 1L, "api/db" -> 2L,
+        "api/db/cache" -> 1L, "web" -> 1L)
     }
 
-    it("assembles a deep chain correctly across doubling rounds") {
-      // depth 20: path must be s0/s1/.../s19 in exact order — the
-      // doubling concatenation is order-sensitive (segment of v, THEN
-      // segment of its ancestor)
+    it("assembles a 20-deep chain in root-to-span order") {
+      // the fingerprint and the path string are both order-sensitive:
+      // every prefix s0/.../sk is its own path, each in exact order
       val rows = (0L until 20L).map(i =>
         (i, if (i == 0) None else Some(i - 1), s"s$i"))
-      val out = paths(rows: _*)
-      out(19L) shouldBe (0 until 20).map("s" + _).mkString("/")
-      out(7L) shouldBe (0 to 7).map("s" + _).mkString("/")
+      paths(rows: _*) shouldBe
+        (0 until 20).map(k => (0 to k).map("s" + _).mkString("/") -> 1L).toMap
     }
 
     it("anchors a dangling-parent fragment at the orphan") {
-      val out = paths(
-        (5L, Some(999L), "orphan"), (6L, Some(5L), "child"))
-      out shouldBe Map(5L -> "orphan", 6L -> "orphan/child")
-    }
-  }
-
-  describe("pathRollup") {
-    it("matches the spanPaths-based rollup on a seeded random forest") {
-      val s = spark
-      import s.implicits._
-      val rng = new scala.util.Random(7)
-      val services = Array("api", "auth", "db", "cache", "web")
-      val rows = (0L until 400L).map { i =>
-        val parent = if (i == 0 || rng.nextDouble() < 0.15) None
-                     else Some(rng.nextLong(i))
-        (s"t${i % 20}", i, parent, services(rng.nextInt(services.length)),
-          rng.nextLong(1000000L))
-      }
-      val df = rows.toDF(
-        "trace_id", "span_id", "parent_span_id", "service", "duration_us")
-      val expected = TreeOps
-        .spanPaths(df.select("trace_id", "span_id", "parent_span_id", "service"))
-        .join(df.select("span_id", "duration_us"), "span_id")
-        .groupBy("path")
-        .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"),
-          org.apache.spark.sql.functions.sum("duration_us").as("d"))
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val got = TreeOps.pathRollup(df).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      got shouldBe expected
+      paths((5L, Some(999L), "orphan"), (6L, Some(5L), "child")) shouldBe
+        Map("orphan" -> 1L, "orphan/child" -> 1L)
     }
 
-    it("localParents reconstruction equals the global loop on a trace-local forest") {
+    it("matches the driver-side path reference on a trace-local forest") {
       val s = spark
       import s.implicits._
       val rng = new scala.util.Random(11)
@@ -282,10 +232,14 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
       }
       val df = rows.toDF(
         "trace_id", "span_id", "parent_span_id", "service", "duration_us")
-      def rolled(local: Boolean) =
-        TreeOps.pathRollup(df, localParents = local).collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      rolled(local = true) shouldBe rolled(local = false)
+      val got = TreeOps.pathRollup(df).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val expected = rows.groupBy(_._1).values.toSeq.flatMap { rs =>
+        val par = rs.map(r => r._2 -> r._3).toMap
+        val svc = rs.map(r => r._2 -> r._4).toMap
+        rs.map(r => refPath(par, svc)(r._2) -> r._5)
+      }.groupMapReduce(_._1)(r => (1L, r._2)) { case ((n, d), (m, e)) => (n + m, d + e) }
+      got shouldBe expected
     }
 
     it("traceContiguous rollup equals the shuffled rollup on partition-contiguous input") {
@@ -306,7 +260,7 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         .repartition(3, org.apache.spark.sql.functions.col("trace_id"))
         .sortWithinPartitions("trace_id")
       def rolled(contig: Boolean) =
-        TreeOps.pathRollup(df, groupCols = Seq("half"), localParents = true,
+        TreeOps.pathRollup(df, groupCols = Seq("half"),
             traceContiguous = contig).collect()
           .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
           .toMap
@@ -326,7 +280,7 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         ("t1", 9L, Option.empty[Long], "api", 5L, 1L))
         .toDF("trace_id", "span_id", "parent_span_id", "service",
           "duration_us", "half")
-      val got = TreeOps.pathRollup(df, groupCols = Seq("half"), localParents = true)
+      val got = TreeOps.pathRollup(df, groupCols = Seq("half"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
         .toMap
@@ -335,15 +289,15 @@ class TreeOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         ("api/db", 1L) -> (1L, 30L), ("api", 1L) -> (1L, 5L))
     }
 
-    it("spanPathsLocal fails loudly on a parent cycle") {
+    it("fails loudly on a parent cycle") {
       val s = spark
       import s.implicits._
       val df = Seq(
-        ("t0", 1L, Option(2L), "a"),
-        ("t0", 2L, Option(1L), "b"))
-        .toDF("trace_id", "span_id", "parent_span_id", "service")
+        ("t0", 1L, Option(2L), "a", 1L),
+        ("t0", 2L, Option(1L), "b", 1L))
+        .toDF("trace_id", "span_id", "parent_span_id", "service", "duration_us")
       val ex = intercept[org.apache.spark.SparkException] {
-        TreeOps.spanPathsLocal(df).collect()
+        TreeOps.pathRollup(df).collect()
       }
       ex.getMessage should include("parent cycle")
     }

@@ -333,7 +333,7 @@ class VectorOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
         val bits = (0 until 4).map { bit =>
           val p = band * 4L + bit
           var s = 0.0
-          v.indices.foreach(i => s += v(i) * graft.functions.LshBandKeysLin.weight(p, i.toLong))
+          v.indices.foreach(i => s += v(i) * graft.functions.LshFamily.Lin.weight(p, i.toLong))
           if (s >= 0) '1' else '0'
         }.mkString
         s"$band:$bits"

@@ -123,7 +123,7 @@ class WhitelistIndexSpec extends AnyFunSpec with Matchers with SparkTestBase {
       java.nio.file.Files.write(path, lines.mkString("\n").getBytes)
 
     it("a changed config file takes effect on the next batch") {
-      val f = java.nio.file.Files.createTempFile("graft_wl_", ".jsonl")
+      val f = java.nio.file.Paths.get(Scratch.fresh("graft_wl_"), "whitelist.jsonl")
       writeConfig(f, """{"name":"kval","fieldType":"long","aliases":["k"],"enableRangeQuery":true}""")
       val reloader = new WhitelistIndex.Reloader(spark, f.toString)
 
@@ -151,7 +151,7 @@ class WhitelistIndexSpec extends AnyFunSpec with Matchers with SparkTestBase {
     }
 
     it("an unchanged file is not re-read (same cached instance)") {
-      val f = java.nio.file.Files.createTempFile("graft_wl_", ".jsonl")
+      val f = java.nio.file.Paths.get(Scratch.fresh("graft_wl_"), "whitelist.jsonl")
       writeConfig(f, """{"name":"kval","fieldType":"long"}""")
       val reloader = new WhitelistIndex.Reloader(spark, f.toString)
       val a = reloader.current()
@@ -161,7 +161,7 @@ class WhitelistIndexSpec extends AnyFunSpec with Matchers with SparkTestBase {
     }
 
     it("loadConfig applies defaults and rejects a missing name") {
-      val f = java.nio.file.Files.createTempFile("graft_wl_", ".jsonl")
+      val f = java.nio.file.Paths.get(Scratch.fresh("graft_wl_"), "whitelist.jsonl")
       writeConfig(f, """{"name":"x"}""")
       val Seq(x) = WhitelistIndex.loadConfig(spark, f.toString)
       (x.fieldType, x.aliases, x.enableRangeQuery, x.enabled) shouldBe

@@ -24,7 +24,7 @@ class ZOrderLayoutSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
   describe("ZOrderLayout") {
     it("round-trips the data unchanged") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_z_rt_").toString
+      val dir = Scratch.fresh("graft_z_rt_")
       ZOrderLayout.writeZOrdered(spansDf, dir, "trace_key", "start_us", nFiles = 8)
       val back = spark.read.parquet(dir)
       back.count() shouldBe spansDf.count()
@@ -33,8 +33,8 @@ class ZOrderLayoutSpec extends AnyFunSpec with Matchers with SparkTestBase {
     }
 
     it("prunes a 2-D box query better than a single-dimension sort layout") {
-      val zDir = java.nio.file.Files.createTempDirectory("graft_z_").toString
-      val tDir = java.nio.file.Files.createTempDirectory("graft_t_").toString
+      val zDir = Scratch.fresh("graft_z_")
+      val tDir = Scratch.fresh("graft_t_")
       val nFiles = 16
       ZOrderLayout.writeZOrdered(spansDf, zDir, "trace_key", "start_us", nFiles)
       // the natural alternative: cluster by time only
