@@ -1,23 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Small-graph operators over edge lists — the cluster-forming step a
-  * dedup pipeline runs AFTER candidate pair generation: near-duplicate
-  * pairs (minhash/simhash/cosine) form components, and each component
-  * keeps one canonical document.
+  * dedup pipeline runs AFTER candidate pair generation (near-duplicate
+  * pairs from minhash/simhash/cosine form components, and each
+  * component keeps one canonical document), plus the fixed-round
+  * rankings over the service and vocabulary graphs.
   *
-  * Spark realization: iterative min-label propagation (the classic
-  * large-graph connected-components shape — HashToMin-style): every
-  * node starts labeled with itself; each round, a node takes the
-  * minimum label among itself and its neighbors; converged when no
-  * label changes. Each round is one join + one partial-aggregated
-  * groupBy on node id — no driver-side graph state, and per-round
-  * lineage is truncated (localCheckpoint) so the plan doesn't grow
-  * with iterations. Rounds needed = graph diameter, which for dedup
-  * clusters (cliques and near-cliques) is 1–2; `maxIter` bounds
-  * adversarial chains.
+  * Two Spark realizations, by what ends the iteration:
+  *   - CONVERGENCE loops ([[connectedComponents]], [[reachability]])
+  *     run distributed, one job per round, because the stop test is
+  *     an action: iterative min-label propagation (HashToMin-style) or
+  *     BFS frontier expansion, each round one join + one
+  *     partial-aggregated groupBy, with per-round lineage truncated by
+  *     localCheckpoint so the plan doesn't grow with iterations. Rounds
+  *     needed = graph diameter, which for dedup clusters (cliques and
+  *     near-cliques) is 1–2; `maxIter` bounds adversarial chains.
+  *   - FIXED-ROUND kernels ([[pageRank]], [[labelPropagation]]) run as
+  *     one lazy task ([[inOneTask]]): the caller's corpus-scale edge
+  *     aggregation stays distributed and map-combined, its bounded
+  *     (src, dst, w) output moves to one partition, and a plain loop
+  *     runs every round there. Nothing runs at build time, and nothing
+  *     is checkpointed, counted or cached.
   */
 object GraphOps {
 
@@ -84,108 +92,143 @@ object GraphOps {
     labels
   }
 
-  /** Weighted PageRank over an edge list, a FIXED number of power
-    * iterations (deterministic by construction — no float convergence
-    * test). Each round is one keyed join + one map-combinable agg, so
-    * at scale the cost is iters × (join shuffle on src + agg shuffle
-    * on dst); lineage truncates per round like connectedComponents.
-    *
-    * Dangling nodes (no out-edges) leak their mass by default —
-    * acceptable for relative-importance ranking. With
-    * `redistributeDangling = true` each round adds the dangling
-    * nodes' pooled rank back uniformly (the standard stochastic-fix:
-    * equivalent to a virtual all-nodes out-edge set), so the rank
-    * vector stays a proper distribution (sums to 1) on any graph.
-    * The pool is a 1-row broadcast aggregate per round — no driver
-    * collect, no extra shuffle of the rank vector.
+  /** Weighted PageRank over an edge list → (node, rank), a FIXED
+    * number of power iterations (deterministic by construction — no
+    * float convergence test), run as one task by [[inOneTask]].
+    * Transition probabilities are exact-int divisions
+    * `w.toDouble / Σw(src).toDouble` (the out-weight summed as a Long);
+    * ranks start at `1.0 / n` over the n distinct endpoints, and each
+    * round is `(1 - 0.85) / n + 0.85 * (infl + dm / n)`, where `dm` is
+    * the rank held by nodes with no out-edge: dangling mass is pooled
+    * back uniformly (the standard stochastic fix), so the rank vector
+    * stays a distribution on any graph. Sums run over the edges sorted
+    * by (src, dst), so the result does not depend on partitioning.
+    * Node ids are strings and weights integral; a null id or weight
+    * fails the task with an IllegalArgumentException.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-      iters: Int, damping: Double = 0.85,
-      redistributeDangling: Boolean = false): DataFrame = {
-    // iters = 0 would return a lazy projection over the `nodes`
-    // checkpoint that the cleanup below unpersists — at least one
-    // round guarantees the returned frame is its OWN checkpoint
+      iters: Int): DataFrame = {
     require(iters >= 1, s"pageRank needs at least one iteration, got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).as("w")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct().localCheckpoint()
-    val n = nodes.count().toDouble
-    val outw = e.groupBy("src").agg(sum("w").as("ow"))
-    // transition probability: exact-int division, identical on any engine
-    val ew = e.join(outw, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("ow").cast("double")).as("p"))
-      .localCheckpoint()
-    val dangling = nodes
-      .join(ew.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
-      .localCheckpoint()
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-    for (_ <- 1 to iters) {
-      val inflow = ew.join(ranks, col("src") === col("node"))
-        .groupBy(col("dst")).agg(sum(col("rank") * col("p")).as("infl"))
-      val base = nodes.join(inflow, col("node") === col("dst"), "left_outer")
-      val next = (if (redistributeDangling) {
-        val pool = ranks.join(dangling, "node")
-          .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
-        base.crossJoin(broadcast(pool))
-          .select(col("node"),
-            (lit((1 - damping) / n) + lit(damping) *
-              (coalesce(col("infl"), lit(0.0)) + col("dm") / n)).as("rank"))
-      } else
-        base.select(col("node"),
-          (lit((1 - damping) / n) + lit(damping) * coalesce(col("infl"), lit(0.0)))
-            .as("rank"))).localCheckpoint()
-      ranks.unpersist()
-      ranks = next
+    val out = StructType(Seq(StructField("node", StringType, nullable = false),
+      StructField("rank", DoubleType, nullable = false)))
+    inOneTask(edgeList("pageRank", edges, srcCol, dstCol, wCol), out) { rows =>
+      val g = new Graph("pageRank", rows)
+      val k = g.nodes.length
+      val n = k.toDouble
+      val outw = new Array[Long](k)
+      val hasOut = new Array[Boolean](k)
+      g.src.indices.foreach { i =>
+        outw(g.src(i)) = Math.addExact(outw(g.src(i)), g.w(i))
+        hasOut(g.src(i)) = true
+      }
+      val p = Array.tabulate(g.src.length)(i => g.w(i).toDouble / outw(g.src(i)).toDouble)
+      val teleport = (1 - Damping) / n
+      var rank = Array.fill(k)(1.0 / n)
+      for (_ <- 1 to iters) {
+        val infl = new Array[Double](k)
+        g.src.indices.foreach(i => infl(g.dst(i)) += rank(g.src(i)) * p(i))
+        var dm = 0.0
+        (0 until k).foreach(v => if (!hasOut(v)) dm += rank(v))
+        rank = Array.tabulate(k)(v => teleport + Damping * (infl(v) + dm / n))
+      }
+      (0 until k).map(v => Row(g.nodes(v), rank(v)))
     }
-    // release the setup checkpoints — the returned ranks frame is its
-    // own materialized checkpoint, so nothing downstream needs these
-    // (the kmeansCentroids lesson: leaked blocks accumulate per call)
-    e.unpersist(); nodes.unpersist(); ew.unpersist(); dangling.unpersist()
-    ranks
   }
+
+  private final val Damping = 0.85
 
   /** Synchronous weighted label propagation — community detection by
     * iterated neighbor vote: each round, every node adopts the label
     * with the largest incident edge-weight sum among its neighbors'
-    * CURRENT labels (ties to the smallest label; isolated nodes keep
-    * their own), for a FIXED `iters` rounds — deterministic by
+    * CURRENT labels (ties to the smallest label in binary UTF-8 order,
+    * Spark's and DuckDB's string order; nodes with no out-edge keep
+    * their label), for a FIXED `iters` rounds — deterministic by
     * construction, like [[pageRank]]'s fixed power iterations (LPA's
     * usual async/random variant is explicitly not reproducible).
     * Nodes start labeled by themselves. Input edges are treated as
     * DIRECTED votes (src listens to dst); pass a mirrored relation
-    * for the undirected semantics.
-    *
-    * Scale: per round one join of the edge list against the k-row
-    * label table on dst + one map-combined (src, label) weight sum +
-    * one argmax agg — the same keyed-join-per-round shape as
-    * pageRank, lineage truncated per round.
+    * for the undirected semantics. The rounds run as one task
+    * ([[inOneTask]]); node ids are strings and weights integral, and a
+    * null id or weight fails the task with an IllegalArgumentException.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, iters: Int): DataFrame = {
     require(iters >= 1, s"labelPropagation needs at least one iteration, got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).as("w")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct().localCheckpoint()
-    var labels = nodes.withColumn("label", col("node"))
-    for (_ <- 1 to iters) {
-      val votes = e.join(labels, col("dst") === col("node"))
-        .groupBy(col("src"), col("label").as("cand"))
-        .agg(sum("w").as("wsum"))
-        .groupBy(col("src"))
-        .agg(min(struct((-col("wsum")).as("nw"), col("cand"))).as("top"))
-        .select(col("src"), col("top.cand").as("win"))
-      val next = labels
-        .join(votes, col("node") === col("src"), "left")
-        .select(col("node"), coalesce(col("win"), col("label")).as("label"))
-        .localCheckpoint()
-      labels.unpersist()
-      labels = next
+    val out = StructType(Seq(StructField("node", StringType, nullable = false),
+      StructField("label", StringType, nullable = false)))
+    inOneTask(edgeList("labelPropagation", edges, srcCol, dstCol, wCol), out) { rows =>
+      val g = new Graph("labelPropagation", rows)
+      var label = Array.range(0, g.nodes.length)
+      for (_ <- 1 to iters) {
+        val next = label.clone()
+        // edges are sorted by src: tally each src's run of votes
+        var i = 0
+        while (i < g.src.length) {
+          val u = g.src(i)
+          val tally = scala.collection.mutable.HashMap[Int, Long]()
+          while (i < g.src.length && g.src(i) == u) {
+            val l = label(g.dst(i))
+            tally(l) = Math.addExact(tally.getOrElse(l, 0L), g.w(i))
+            i += 1
+          }
+          // node indices follow binary UTF-8 order, so the smaller
+          // index is the smaller label
+          next(u) = tally.reduce { (a, b) =>
+            if (b._2 > a._2 || (b._2 == a._2 && b._1 < a._1)) b else a }._1
+        }
+        label = next
+      }
+      g.nodes.indices.map(v => Row(g.nodes(v), g.nodes(label(v))))
     }
-    e.unpersist(); nodes.unpersist()
-    labels
+  }
+
+  /** Runs `kernel` over ALL of `rows` inside ONE task and returns its
+    * `out`-shaped rows: the rows travel to a single partition (one
+    * small shuffle) and the kernel sees them as one array. For
+    * fixed-round iterations over a bounded relation — a service or
+    * vocabulary graph that the corpus-scale aggregation upstream has
+    * already collapsed — where a distributed job per round costs more
+    * than the rounds themselves. The caller owns the bound: `rows` must
+    * fit one task's memory. Lazy: building the frame starts no job, and
+    * nothing is cached or checkpointed. */
+  def inOneTask(rows: DataFrame, out: StructType)(kernel: Array[Row] => Seq[Row]): DataFrame =
+    rows.repartition(1)
+      .mapPartitions((part: Iterator[Row]) => kernel(part.toArray).iterator)(Encoders.row(out))
+
+  /** The (src, dst, w) relation the fixed-round kernels read: string
+    * node ids and integral weights widened to Long, checked on the
+    * schema so a wrong caller fails at build time. */
+  private def edgeList(op: String, edges: DataFrame, srcCol: String, dstCol: String,
+      wCol: String): DataFrame = {
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).as("w"))
+    val Seq(st, dt, wt) = e.schema.map(_.dataType)
+    require(st == StringType && dt == StringType,
+      s"$op: node ids must be strings, got $st and $dt")
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(wt),
+      s"$op: edge weights must be integral, got $wt")
+    e.withColumn("w", col("w").cast(LongType))
+  }
+
+  /** One kernel call's edge rows: node ids indexed in binary UTF-8
+    * order (Spark's and DuckDB's string order) and the edges as
+    * parallel (src, dst, w) arrays sorted by (src, dst, w), so every
+    * sum over them runs in a fixed order. A null id or weight throws
+    * an IllegalArgumentException naming `op`: it would otherwise never
+    * join, and a null node would count as dangling. */
+  private final class Graph(op: String, rows: Array[Row]) {
+    rows.foreach { r =>
+      if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
+        throw new IllegalArgumentException(
+          s"$op: null node id or weight in edge (${r.get(0)}, ${r.get(1)}, ${r.get(2)})")
+    }
+    val nodes: Array[String] = rows.flatMap(r => Array(r.getString(0), r.getString(1)))
+      .distinct.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0).map(_.toString)
+    private val index = nodes.zipWithIndex.toMap
+    private val sorted = rows.map(r => (index(r.getString(0)), index(r.getString(1)), r.getLong(2)))
+      .sorted
+    val src: Array[Int] = sorted.map(_._1)
+    val dst: Array[Int] = sorted.map(_._2)
+    val w: Array[Long] = sorted.map(_._3)
   }
 
   /** All-pairs minimum-hop reachability (transitive closure annotated

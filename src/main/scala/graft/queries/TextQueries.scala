@@ -2768,10 +2768,11 @@ object TextQueries {
     // (topic-ish groups) the dedup_clusters family doesn't cover
     // (components find connectivity; LPA finds weighted communities
     // INSIDE one connected vocabulary). Deterministic by construction:
-    // fixed rounds, argmax votes tie-broken to the smallest label;
-    // the oracle unrolls the same three rounds. The corpus-sized work
-    // is the one bigram-type shuffle; every round then joins the
-    // vocab-sized edge list against the label table.
+    // fixed rounds, argmax votes tie-broken to the smallest label in
+    // binary UTF-8 order; the oracle unrolls the same three rounds.
+    // The corpus-sized work is the one bigram-type shuffle; the rounds
+    // then run in one task over the vocab-sized edge list, so building
+    // the frame starts no job.
     "text_term_communities" -> QueryDef.sql(
       (s, dir) => {
         val bg = Tables.documents(s, dir)
@@ -2898,13 +2899,13 @@ object TextQueries {
     // bigram co-occurrence graph (Mihalcea & Tarau 2004), the
     // graph-centrality complement of RAKE's degree/frequency ratio.
     // Reuses GraphOps.pageRank (3 damped rounds, exact-int transition
-    // probabilities, per-round lineage truncation); ranking and the
-    // top-20 cut use the ROUNDED score (the §5 cut-line rule) with a
-    // term tie-break. The oracle unrolls the same 3 rounds as CTEs —
-    // the trace_service_rank template on a different graph. Scale:
-    // the corpus collapses to the vocab²-bounded edge set in one
-    // map-combined pass; each round is an edge-list join + partial
-    // agg over ≤ vocab rows.
+    // probabilities, all rounds in one task); ranking and the top-20
+    // cut use the ROUNDED score (the §5 cut-line rule) with a term
+    // tie-break. The oracle unrolls the same 3 rounds as CTEs — the
+    // trace_service_rank template on a different graph. Scale: the
+    // corpus collapses to the vocab²-bounded edge set in one
+    // map-combined pass; the rounds then loop over ≤ vocab² edges in
+    // that one task, and building the frame starts no job.
     "text_textrank_terms" -> QueryDef.sql(
       (s, dir) => {
         val bg = Tables.documents(s, dir)
@@ -2919,8 +2920,7 @@ object TextQueries {
           .groupBy("a", "b").agg(count(lit(1)).as("w"))
         val edges = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
           .unionByName(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
-        val pr = graft.operators.GraphOps.pageRank(edges, "src", "dst", "w",
-          iters = 3, redistributeDangling = true)
+        val pr = graft.operators.GraphOps.pageRank(edges, "src", "dst", "w", iters = 3)
           .select(col("node").as("term"), round(col("rank"), 6).as("rank"))
         pr.orderBy(col("rank").desc, col("term")).limit(20)
       },

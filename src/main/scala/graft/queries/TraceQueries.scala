@@ -4,10 +4,10 @@ import graft.{Scratch, Tables}
 import graft.operators.{ShardedWindow, SpanOps, TimePartitioner, TraceSearch, WhitelistIndex}
 import graft.operators.WhitelistIndex.WhitelistField
 import graft.trace.TraceDataset
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
 
 /** Trace-domain coverage (SURVEY.md §2 A-block): the haystack-traces
   * reader/indexer query surface over the `events`-derived span relation
@@ -1483,10 +1483,12 @@ object TraceQueries {
     // construction, no float convergence test; dangling mass
     // REDISTRIBUTED uniformly each round so the rank vector is a
     // proper distribution even when a leaf service never calls out).
-    // Call edges = parent→child service pairs weighted by call count;
-    // the oracle unrolls the same three iterations as CTEs with the
-    // identical IEEE expression tree, so only reduce-order ulps differ
-    // under the final ROUND.
+    // Call edges = parent→child service pairs weighted by call count:
+    // the one distributed, map-combined aggregation; the rounds then
+    // run in one task over that service-bounded edge list, so building
+    // the frame starts no job. The oracle unrolls the same three
+    // iterations as CTEs with the identical IEEE expression tree, so
+    // only reduce-order ulps differ under the final ROUND.
     "trace_service_rank" -> QueryDef.sql(
       (s, dir) => {
         val sp = spans(s, dir)
@@ -1494,8 +1496,7 @@ object TraceQueries {
         val parent = sp.select(col("span_id"), col("service").as("src"))
         val edges = child.join(parent, col("parent_span_id") === col("span_id"))
           .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        graft.operators.GraphOps.pageRank(edges, "src", "dst", "w", iters = 3,
-          redistributeDangling = true)
+        graft.operators.GraphOps.pageRank(edges, "src", "dst", "w", iters = 3)
           .select(col("node").as("service"), round(col("rank"), 6).as("rank"))
           .orderBy("service")
       },
@@ -3683,9 +3684,7 @@ object TraceQueries {
     // arithmetic is scaled-integer with floor division (rank mass in
     // 1e12 units, edge shares in ppm) so both engines iterate to
     // bit-identical fixpoints: r'(v) = (1e12/S)·15% + 85%·(Σ_u
-    // r(u)·p(u→v) + dangling/S), d = 0.85. Each round localCheckpoints
-    // (the trace_shortest_path discipline) so lineage stays flat and
-    // the three reads of the previous round don't recompute it.
+    // r(u)·p(u→v) + dangling/S), d = 0.85.
     "trace_pagerank" -> QueryDef.sql(
       (s, dir) => {
         val sp = spans(s, dir).select("span_id", "parent_span_id", "service")
@@ -3693,61 +3692,50 @@ object TraceQueries {
           .join(sp.as("p"), col("c.parent_span_id") === col("p.span_id"))
           .groupBy(col("p.service").as("src"), col("c.service").as("dst"))
           .agg(count(lit(1)).as("w"))
-        // r13: the corpus-scale work (spans self-join + edge agg) stays
-        // distributed and runs ONCE (the out-weight normalization also
-        // moves to the driver — as a join it re-executed the self-join
-        // on its second branch); the 6 power-iteration rounds then ride
-        // a service-cardinality-bounded edge list — bounded driver
-        // state by the same contract as kmeans centroids/codebooks.
-        // The former per-round distributed form paid 6 localCheckpoints
-        // + ~3 jobs per round on a few-row relation. Long arithmetic
-        // mirrors the ANSI column math op for op (Math.*Exact; all
-        // operands non-negative so trunc div == floor div == both
-        // engines' `div`).
-        //
-        // EAGER CONSTRUCTION (r13 advice, documented): the collect()
-        // below executes the spans self-join at QUERY-BUILD time and
-        // the returned LocalTableScan freezes the result as of that
-        // moment — a consumer that only wants the plan (explain dumps,
-        // schema checks, plan-shape tests) pays full execution, and
-        // harness code must not assume lazy construction. Acceptable
-        // here because the benchmark inputs are static; a live
-        // deployment would schedule this as a periodic job, not a view.
-        val edgeRows: Array[(String, String, Long)] = edges
-          .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val outw: Map[String, Long] = edgeRows.groupBy(_._1)
-          .map { case (src, es) =>
-            src -> es.foldLeft(0L)((acc, e) => Math.addExact(acc, e._3)) }
-        val normRows: Array[(String, String, Long)] = edgeRows.map {
-          case (src, dst, w) =>
-            (src, dst, Math.multiplyExact(w, 1000000L) / outw(src))
-        }
-        val nodes: Array[String] =
-          normRows.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-        val srcs: Set[String] = normRows.map(_._1).toSet
-        val scnt = nodes.length.toLong
-        var rank: Map[String, Long] =
-          nodes.map(_ -> 1000000000000L / scnt).toMap
-        for (_ <- 1 to 6) {
-          val contrib = scala.collection.mutable.HashMap[String, Long]()
-          normRows.foreach { case (src, dst, pPpm) =>
-            val c = Math.multiplyExact(rank(src), pPpm) / 1000000L
-            contrib(dst) = Math.addExact(contrib.getOrElse(dst, 0L), c)
+        // The corpus-scale work (spans self-join + edge agg) stays
+        // distributed and runs ONCE; the out-weight normalization and
+        // the 6 power-iteration rounds then run in one task over the
+        // service-bounded edge list (GraphOps.inOneTask, the bound
+        // kmeans centroids state), so building the frame starts no
+        // job. Long arithmetic mirrors the ANSI column math op for op
+        // (Math.*Exact; all operands non-negative so trunc div ==
+        // floor div == both engines' `div`).
+        val out = StructType(Seq(StructField("service", StringType),
+          StructField("rank_ppm", LongType, nullable = false)))
+        graft.operators.GraphOps.inOneTask(edges, out) { rows =>
+          val edgeRows: Array[(String, String, Long)] =
+            rows.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+          val outw: Map[String, Long] = edgeRows.groupBy(_._1)
+            .map { case (src, es) =>
+              src -> es.foldLeft(0L)((acc, e) => Math.addExact(acc, e._3)) }
+          val normRows: Array[(String, String, Long)] = edgeRows.map {
+            case (src, dst, w) =>
+              (src, dst, Math.multiplyExact(w, 1000000L) / outw(src))
           }
-          val dangling = nodes.filterNot(srcs.contains)
-            .foldLeft(0L)((a, n) => Math.addExact(a, rank(n)))
-          rank = nodes.map { n =>
-            n -> Math.addExact(
-              (1000000000000L / scnt) * 15L / 100L,
-              Math.multiplyExact(
-                Math.addExact(contrib.getOrElse(n, 0L), dangling / scnt),
-                85L) / 100L)
-          }.toMap
-        }
-        import s.implicits._
-        nodes.toSeq.map(n => (n, rank(n) / 1000000L))
-          .toDF("service", "rank_ppm")
-          .orderBy(desc("rank_ppm"), col("service"))
+          val nodes: Array[String] =
+            normRows.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+          val srcs: Set[String] = normRows.map(_._1).toSet
+          val scnt = nodes.length.toLong
+          var rank: Map[String, Long] =
+            nodes.map(_ -> 1000000000000L / scnt).toMap
+          for (_ <- 1 to 6) {
+            val contrib = scala.collection.mutable.HashMap[String, Long]()
+            normRows.foreach { case (src, dst, pPpm) =>
+              val c = Math.multiplyExact(rank(src), pPpm) / 1000000L
+              contrib(dst) = Math.addExact(contrib.getOrElse(dst, 0L), c)
+            }
+            val dangling = nodes.filterNot(srcs.contains)
+              .foldLeft(0L)((a, n) => Math.addExact(a, rank(n)))
+            rank = nodes.map { n =>
+              n -> Math.addExact(
+                (1000000000000L / scnt) * 15L / 100L,
+                Math.multiplyExact(
+                  Math.addExact(contrib.getOrElse(n, 0L), dangling / scnt),
+                  85L) / 100L)
+            }.toMap
+          }
+          nodes.toSeq.map(n => Row(n, rank(n) / 1000000L))
+        }.orderBy(desc("rank_ppm"), col("service"))
       },
       {
         val iters = (1 to 6).map { i =>
@@ -3795,53 +3783,51 @@ object TraceQueries {
     // of the textbook L2 keeps every iterate exactly representable, so
     // both engines reach bit-identical fixpoints; raw propagations run
     // in DECIMAL(38,0)/HUGEINT (score·weight ≤ 1e20 at sf100, ×1e12
-    // ≤ 1e32 — in range on both). localCheckpoint per round keeps the
-    // 8-step lineage flat.
+    // ≤ 1e32 — in range on both).
     "trace_hits" -> QueryDef.sql(
       (s, dir) => {
         val sp = spans(s, dir).select("span_id", "parent_span_id", "service")
-        // r13: as in trace_pagerank, only the edge aggregation touches
-        // the corpus; the 8 propagate/renormalize steps run on the
-        // driver over the bounded service graph in BigInt — the exact
-        // integer semantics of the former DECIMAL(38,0) column math
-        // (score*w can pass 1e18, hence BigInt, matching HUGEINT),
-        // replacing 8 localCheckpoints + per-round 1-row total jobs.
-        // EAGER CONSTRUCTION: the collect() executes at query-build
-        // time and freezes the result (see trace_pagerank's note).
-        val edgeRows: Array[(String, String, Long)] = sp.as("c")
+        // as in trace_pagerank, only the edge aggregation touches the
+        // corpus; the 8 propagate/renormalize steps run in one task
+        // (GraphOps.inOneTask) over the bounded service graph in
+        // BigInt — the exact integer semantics of DECIMAL(38,0) column
+        // math (score*w can pass 1e18, hence BigInt, matching HUGEINT).
+        val edges = sp.as("c")
           .join(sp.as("p"), col("c.parent_span_id") === col("p.span_id"))
           .groupBy(col("p.service").as("src"), col("c.service").as("dst"))
           .agg(count(lit(1)).as("w"))
-          .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val nodes: Array[String] =
-          edgeRows.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-        val scnt = nodes.length.toLong
-        val init: Map[String, BigInt] =
-          nodes.map(_ -> BigInt(1000000000000L / scnt)).toMap
-        // propagate scores along edges from the `from` endpoint to the
-        // `to` endpoint, then L1-renormalize to 1e12 total
-        def propagate(score: Map[String, BigInt], bySrc: Boolean): Map[String, BigInt] = {
-          val raw = scala.collection.mutable.HashMap[String, BigInt]()
-          edgeRows.foreach { case (src, dst, w) =>
-            val (from, to) = if (bySrc) (src, dst) else (dst, src)
-            raw(to) = raw.getOrElse(to, BigInt(0)) + score(from) * w
+        val out = StructType(Seq(StructField("service", StringType),
+          StructField("authority_ppm", LongType, nullable = false),
+          StructField("hub_ppm", LongType, nullable = false)))
+        graft.operators.GraphOps.inOneTask(edges, out) { rows =>
+          val edgeRows: Array[(String, String, Long)] =
+            rows.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+          val nodes: Array[String] =
+            edgeRows.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+          val scnt = nodes.length.toLong
+          val init: Map[String, BigInt] =
+            nodes.map(_ -> BigInt(1000000000000L / scnt)).toMap
+          // propagate scores along edges from the `from` endpoint to the
+          // `to` endpoint, then L1-renormalize to 1e12 total
+          def propagate(score: Map[String, BigInt], bySrc: Boolean): Map[String, BigInt] = {
+            val raw = scala.collection.mutable.HashMap[String, BigInt]()
+            edgeRows.foreach { case (src, dst, w) =>
+              val (from, to) = if (bySrc) (src, dst) else (dst, src)
+              raw(to) = raw.getOrElse(to, BigInt(0)) + score(from) * w
+            }
+            val tot = raw.values.sum
+            nodes.map { n =>
+              n -> raw.get(n).fold(BigInt(0))(r => r * BigInt(1000000000000L) / tot)
+            }.toMap
           }
-          val tot = raw.values.sum
-          nodes.map { n =>
-            n -> raw.get(n).fold(BigInt(0))(r => r * BigInt(1000000000000L) / tot)
-          }.toMap
-        }
-        var h = init
-        var a = init
-        for (_ <- 1 to 4) {
-          a = propagate(h, bySrc = true)
-          h = propagate(a, bySrc = false)
-        }
-        import s.implicits._
-        nodes.toSeq
-          .map(n => (n, (a(n) / 1000000).toLong, (h(n) / 1000000).toLong))
-          .toDF("service", "authority_ppm", "hub_ppm")
-          .orderBy(desc("authority_ppm"), col("service"))
+          var h = init
+          var a = init
+          for (_ <- 1 to 4) {
+            a = propagate(h, bySrc = true)
+            h = propagate(a, bySrc = false)
+          }
+          nodes.toSeq.map(n => Row(n, (a(n) / 1000000).toLong, (h(n) / 1000000).toLong))
+        }.orderBy(desc("authority_ppm"), col("service"))
       },
       {
         val iters = (1 to 4).map { i =>

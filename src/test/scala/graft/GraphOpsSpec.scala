@@ -148,19 +148,14 @@ class GraphOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
       r("l") shouldBe base + 0.85 * (1.0 / 3) * 0.25 +- 1e-12
     }
 
-    it("redistributeDangling keeps the rank vector a distribution on a dangling graph") {
+    it("pools dangling mass so the rank vector stays a distribution on a dangling graph") {
       val s = spark
       import s.implicits._
-      // z has no out-edges: the default variant leaks its mass each
-      // round (sum < 1); the redistributing variant pools it back
-      // uniformly, so the total stays exactly 1 up to reduce ulps
+      // z has no out-edges: its mass is pooled back uniformly each
+      // round, so the total stays exactly 1 up to summation ulps
       val edges = Seq(("a", "b", 1L), ("b", "z", 1L), ("a", "z", 2L))
         .toDF("src", "dst", "w")
-      val leaky = GraphOps.pageRank(edges, "src", "dst", "w", iters = 8)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      leaky.values.sum should be < 0.999 // mass visibly lost
-      val fixed = GraphOps.pageRank(edges, "src", "dst", "w", iters = 8,
-        redistributeDangling = true)
+      val fixed = GraphOps.pageRank(edges, "src", "dst", "w", iters = 8)
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       fixed.values.sum shouldBe 1.0 +- 1e-9
       // the dangling sink still dominates (both its in-edges), and
@@ -168,5 +163,57 @@ class GraphOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
       fixed("z") should be > fixed("a")
       fixed.values.foreach(_ should be >= 0.15 / 3 - 1e-12)
     }
+  }
+
+  describe("fixed-round kernels") {
+    // the IllegalArgumentException is thrown inside the one task, so
+    // the driver sees it as the cause of the job failure
+    def rootIllegalArgument(t: Throwable): Option[IllegalArgumentException] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalArgumentException => e }
+
+    it("leave no persisted RDD behind") {
+      val s = spark
+      import s.implicits._
+      val e = Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "a", 1L), ("a", "d", 1L))
+        .toDF("src", "dst", "w")
+      val before = spark.sparkContext.getPersistentRDDs.size
+      GraphOps.pageRank(e, "src", "dst", "w", iters = 3).collect()
+      GraphOps.labelPropagation(e, "src", "dst", "w", iters = 3).collect()
+      spark.sparkContext.getPersistentRDDs.size shouldBe before
+    }
+
+    it("break label ties in binary UTF-8 order, not UTF-16 order") {
+      val s = spark
+      import s.implicits._
+      // U+FF61 is EF BD A1 in UTF-8 and 0xFF61 in UTF-16; U+1F600 is
+      // F0 9F 98 80 and the surrogate pair D83D DE00: the two orders
+      // disagree, and Spark and DuckDB compare strings by UTF-8 bytes
+      val e = Seq(("m", "\uFF61", 3L), ("m", "\uD83D\uDE00", 3L)).toDF("src", "dst", "w")
+      val out = GraphOps.labelPropagation(e, "src", "dst", "w", iters = 1)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      out("m") shouldBe "\uFF61"
+    }
+
+    it("fail loudly on a null node id") {
+      val s = spark
+      import s.implicits._
+      val e = Seq(("a", "b", 1L), (null, "a", 1L), ("b", null, 1L)).toDF("src", "dst", "w")
+      for ((op, run) <- Seq[(String, () => Any)](
+          "pageRank" -> (() => GraphOps.pageRank(e, "src", "dst", "w", iters = 3).collect()),
+          "labelPropagation" -> (() => GraphOps.labelPropagation(e, "src", "dst", "w", iters = 3).collect()))) {
+        val thrown = intercept[Exception](run())
+        val cause = rootIllegalArgument(thrown)
+        withClue(thrown.toString) { cause should not be empty }
+        cause.get.getMessage should include(op)
+      }
+    }
+
+    for (name <- Seq("trace_service_rank", "text_textrank_terms", "text_term_communities",
+        "trace_pagerank", "trace_hits"))
+      it(s"build $name with no Spark job on the building thread") {
+        SparkEntry.queries(name)(spark, sfDir).collect()
+        jobsDuring(SparkEntry.queries(name)(spark, sfDir)) shouldBe 0
+      }
   }
 }

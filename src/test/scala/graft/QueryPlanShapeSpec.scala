@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funspec.AnyFunSpec
 import org.scalatest.matchers.should.Matchers
 
@@ -12,6 +13,22 @@ class QueryPlanShapeSpec extends AnyFunSpec with Matchers with SparkTestBase {
 
   private def plan(name: String): String =
     SparkEntry.allDefs(name).fn(spark, sfDir).queryExecution.executedPlan.toString
+
+  private def windowOps(p: String): Int = "(?<![A-Za-z])Window ".r.findAllIn(p).length
+
+  /** The GraphOps.inOneTask shape: one single-partition exchange into
+    * the kernel's MapPartitions, no cached or local relation, and no
+    * Window beyond the span derivation's parent lag. */
+  private def oneTaskKernel(p: String): Unit = {
+    p should include("Exchange SinglePartition")
+    p should include("MapPartitions")
+    p should not include "InMemoryTableScan"
+    p should not include "LocalTableScan"
+    p should not include "CartesianProduct"
+    val spansPlan = graft.operators.SpanOps.spansFromEvents(Tables.events(spark, sfDir))
+      .queryExecution.executedPlan.toString
+    windowOps(p) shouldBe windowOps(spansPlan)
+  }
 
   describe("round-6 plan shapes") {
     it("text_tfidf pushes the per-doc argmax below the shuffle and broadcasts df") {
@@ -81,12 +98,16 @@ class QueryPlanShapeSpec extends AnyFunSpec with Matchers with SparkTestBase {
     }
 
     it("trace_field_values_meta reads the catalog relation, never the span source") {
-      val p = plan("trace_field_values_meta")
+      val df = SparkEntry.allDefs("trace_field_values_meta").fn(spark, sfDir)
       // the ServiceMetadataQueryGenerator fast path: field values for
       // service/operation come from the tiny materialized catalog —
-      // a plan that still scans the events/span source defeats it
-      p should include("graft_svc_catalog_")
-      p should not include "events.parquet"
+      // a plan that still scans the events/span source defeats it.
+      // Asserted on the file relations' root paths: the printed plan
+      // truncates a long `Location:` path
+      val roots = df.queryExecution.optimizedPlan.collect { case l: LogicalRelation => l.relation }
+        .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.getName) }.flatten
+      roots should not be empty
+      all(roots) should startWith("graft_svc_catalog_")
     }
 
     it("text_ngram_novelty explodes the corpus once — both aggregates share the tri exchange") {
@@ -481,15 +502,13 @@ class QueryPlanShapeSpec extends AnyFunSpec with Matchers with SparkTestBase {
       p should not include "Expand"
     }
 
-    it("trace_pagerank emits driver-iterated ranks as a local relation") {
+    it("trace_pagerank iterates ranks in one task over the aggregated edge list") {
       val p = plan("trace_pagerank")
-      // r13: the corpus-scale edge aggregation runs eagerly (bounded
-      // collect) and the 6 power-iteration rounds happen on the
-      // driver, so the registered plan is just the tiny result
-      // relation — no per-round join lineage, no checkpoint scans
-      p should include("LocalTableScan")
-      p should not include "CartesianProduct"
-      p should not include "Window"
+      // the corpus-scale edge aggregation stays distributed; its output
+      // moves to one partition and the 6 power-iteration rounds run in
+      // that one task — no per-round join lineage, no checkpoint scans,
+      // no build-time collect frozen into a local relation
+      oneTaskKernel(p)
     }
 
     it("trace_bootstrap_ci fans out replicates in the scan and shuffles once") {
@@ -592,13 +611,11 @@ class QueryPlanShapeSpec extends AnyFunSpec with Matchers with SparkTestBase {
       p should not include "CartesianProduct"
     }
 
-    it("trace_hits emits driver-iterated scores as a local relation") {
+    it("trace_hits iterates scores in one task over the aggregated edge list") {
       val p = plan("trace_hits")
-      // r13: same shape as trace_pagerank — one eager bounded edge
-      // collect, 8 driver-local propagate rounds, local result
-      p should include("LocalTableScan")
-      p should not include "CartesianProduct"
-      p should not include "Window"
+      // same shape as trace_pagerank: the 8 propagate rounds run in
+      // one task over the aggregated edge list
+      oneTaskKernel(p)
     }
 
     it("trace_attribution rides user-keyed window shuffles only") {
