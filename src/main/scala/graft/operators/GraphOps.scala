@@ -8,26 +8,47 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Small-graph operators over edge lists — the cluster-forming step a
   * dedup pipeline runs AFTER candidate pair generation (near-duplicate
   * pairs from minhash/simhash/cosine form components, and each
-  * component keeps one canonical document), plus the fixed-round
-  * rankings over the service and vocabulary graphs.
+  * component keeps one canonical document), plus the rankings, walks
+  * and peels over the service and vocabulary graphs.
   *
-  * Two Spark realizations, by what ends the iteration:
-  *   - CONVERGENCE loops ([[connectedComponents]], [[reachability]])
-  *     run distributed, one job per round, because the stop test is
-  *     an action: iterative min-label propagation (HashToMin-style) or
-  *     BFS frontier expansion, each round one join + one
-  *     partial-aggregated groupBy, with per-round lineage truncated by
-  *     localCheckpoint so the plan doesn't grow with iterations. Rounds
-  *     needed = graph diameter, which for dedup clusters (cliques and
-  *     near-cliques) is 1–2; `maxIter` bounds adversarial chains.
-  *   - FIXED-ROUND kernels ([[pageRank]], [[labelPropagation]]) run as
-  *     one lazy task ([[inOneTask]]): the caller's corpus-scale edge
+  * Two Spark realizations, by the size of the graph:
+  *   - ONE convergence loop, [[connectedComponents]], runs distributed,
+  *     one job per round, because its graph is corpus-scale (dedup
+  *     pairs): iterative min-label propagation (HashToMin-style), each
+  *     round one join + one partial-aggregated groupBy, with per-round
+  *     lineage truncated by localCheckpoint so the plan doesn't grow
+  *     with iterations. Rounds needed = graph diameter, which for
+  *     dedup clusters (cliques and near-cliques) is 1–2; `maxIter`
+  *     bounds adversarial chains.
+  *   - Everything over a BOUNDED graph ([[pageRank]],
+  *     [[labelPropagation]], [[reachability]], [[pathSquaring]],
+  *     [[kCore]], [[triangles]]) is a plain Scala kernel run as one
+  *     lazy task ([[inOneTask]]): the caller's corpus-scale edge
   *     aggregation stays distributed and map-combined, its bounded
-  *     (src, dst, w) output moves to one partition, and a plain loop
-  *     runs every round there. Nothing runs at build time, and nothing
-  *     is checkpointed, counted or cached.
+  *     output moves to one partition, and a plain loop runs every
+  *     round there. Nothing runs at build time, and nothing is
+  *     checkpointed, counted or cached. The bound is a contract, not
+  *     an option: a kernel handed more than [[MaxOneTaskNodes]] nodes
+  *     fails its task with an IllegalArgumentException.
   */
 object GraphOps {
+
+  /** The most nodes (or, for BPE, vocabulary words) a one-task kernel
+    * accepts. The pair kernels hold an n×n matrix, which at this bound
+    * is 16.8M cells (128 MB of longs) — what one task can hold. The
+    * service and vocabulary graphs of every pack have 5 and 31 nodes. */
+  final val MaxOneTaskNodes = 4096
+
+  /** Throws an IllegalArgumentException naming `op` and the count when
+    * `n` `what` exceed [[MaxOneTaskNodes]]. */
+  private[operators] def requireOneTask(op: String, n: Int, what: String): Unit =
+    if (n > MaxOneTaskNodes)
+      throw new IllegalArgumentException(
+        s"$op: $n $what exceed the one-task bound of $MaxOneTaskNodes")
+
+  /** A kernel's output schema: non-nullable fields. */
+  private[operators] def nonNull(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (name, t) => StructField(name, t, nullable = false) })
 
   /** Connected components of the undirected graph given by (src, dst)
     * edge rows → (node, component) where component = the component's
@@ -109,9 +130,8 @@ object GraphOps {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
       iters: Int): DataFrame = {
     require(iters >= 1, s"pageRank needs at least one iteration, got $iters")
-    val out = StructType(Seq(StructField("node", StringType, nullable = false),
-      StructField("rank", DoubleType, nullable = false)))
-    inOneTask(edgeList("pageRank", edges, srcCol, dstCol, wCol), out) { rows =>
+    val out = nonNull("node" -> StringType, "rank" -> DoubleType)
+    inOneTask(edgeList("pageRank", edges, srcCol, dstCol, Some(wCol)), out) { rows =>
       val g = new Graph("pageRank", rows)
       val k = g.nodes.length
       val n = k.toDouble
@@ -154,9 +174,8 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, iters: Int): DataFrame = {
     require(iters >= 1, s"labelPropagation needs at least one iteration, got $iters")
-    val out = StructType(Seq(StructField("node", StringType, nullable = false),
-      StructField("label", StringType, nullable = false)))
-    inOneTask(edgeList("labelPropagation", edges, srcCol, dstCol, wCol), out) { rows =>
+    val out = nonNull("node" -> StringType, "label" -> StringType)
+    inOneTask(edgeList("labelPropagation", edges, srcCol, dstCol, Some(wCol)), out) { rows =>
       val g = new Graph("labelPropagation", rows)
       var label = Array.range(0, g.nodes.length)
       for (_ <- 1 to iters) {
@@ -182,25 +201,126 @@ object GraphOps {
     }
   }
 
+  /** All-pairs minimum-hop reachability (transitive closure annotated
+    * with shortest hop counts) over a directed edge list →
+    * (src, dst, hops), hops ≥ 1: one BFS per source in one task
+    * ([[inOneTask]]), over the (src, dst) pairs made distinct, map-side
+    * combined, before they move there. A node is
+    * recorded at the first hop that reaches it, so a pair lands at its
+    * minimum hop and a source reached again records its shortest round
+    * trip; a finite graph always drains, so there is no hop bound. */
+  def reachability(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val out = nonNull("src" -> StringType, "dst" -> StringType, "hops" -> LongType)
+    inOneTask(edgeList("reachability", edges, srcCol, dstCol, None).distinct(), out) { rows =>
+      val g = new Graph("reachability", rows)
+      val adj = g.src.indices.groupMap(g.src(_))(g.dst(_)).withDefaultValue(Seq.empty)
+      g.nodes.indices.flatMap { s =>
+        val hops = new Array[Long](g.nodes.length) // 0 = not reached yet
+        var (frontier, h) = (Seq(s), 0L)
+        while (frontier.nonEmpty) {
+          h += 1
+          frontier = frontier.flatMap(adj).distinct.filter(hops(_) == 0L)
+          frontier.foreach(hops(_) = h)
+        }
+        hops.indices.filter(hops(_) > 0L).map(t => Row(g.nodes(s), g.nodes(t), hops(t)))
+      }
+    }
+  }
+
+  /** Best path weights over a weighted directed edge list →
+    * (src, dst, w) by `rounds` synchronous rounds of tropical matrix
+    * squaring, `d'(s, t) = best(d(s, t), d(s, m) + d(m, t))`: every walk
+    * of at most 2^rounds edges, so a max-plus walk stays bounded on a
+    * cyclic graph, and a (s, s) row is the best cycle through s. `best`
+    * is min for the cheapest chains, max for the costliest. Sums are
+    * Math.addExact, the ANSI long `+`. Runs in one task ([[inOneTask]]). */
+  def pathSquaring(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
+      rounds: Int)(best: (Long, Long) => Long): DataFrame = {
+    require(rounds >= 1, s"pathSquaring needs at least one round, got $rounds")
+    val out = nonNull("src" -> StringType, "dst" -> StringType, "w" -> LongType)
+    inOneTask(edgeList("pathSquaring", edges, srcCol, dstCol, Some(wCol)), out) { rows =>
+      val g = new Graph("pathSquaring", rows)
+      val k = g.nodes.length
+      val has = new Array[Boolean](k * k)
+      val d = new Array[Long](k * k)
+      def put(c: Int, v: Long): Unit = {
+        d(c) = if (has(c)) best(d(c), v) else v
+        has(c) = true
+      }
+      g.src.indices.foreach(i => put(g.src(i) * k + g.dst(i), g.w(i)))
+      for (_ <- 1 to rounds) {
+        val (ph, pd) = (has.clone(), d.clone())
+        for (s <- 0 until k; m <- 0 until k if ph(s * k + m); t <- 0 until k if ph(m * k + t))
+          put(s * k + t, Math.addExact(pd(s * k + m), pd(m * k + t)))
+      }
+      has.indices.filter(has).map(c => Row(g.nodes(c / k), g.nodes(c % k), d(c)))
+    }
+  }
+
+  /** The `k`-core peel of an undirected edge list → (node,
+    * core_degree): `rounds` synchronous rounds, each dropping every
+    * edge with an endpoint of degree < k in the previous round's edge
+    * set, so the result is exact for `rounds` whether or not the peel
+    * has converged. Runs in one task ([[inOneTask]]). */
+  def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
+      rounds: Int): DataFrame = {
+    val out = nonNull("node" -> StringType, "core_degree" -> LongType)
+    inOneTask(edgeList("kCore", edges, aCol, bCol, None), out) { rows =>
+      val g = new Graph("kCore", rows)
+      var alive = g.undirected
+      for (_ <- 1 to rounds) {
+        val deg = g.degrees(alive)
+        alive = alive.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+      }
+      val deg = g.degrees(alive)
+      deg.indices.filter(deg(_) > 0).map(v => Row(g.nodes(v), deg(v).toLong))
+    }
+  }
+
+  /** Exact triangle counts over an undirected edge list → (node,
+    * degree, n_triangles), by DEGREE ORIENTATION: every edge points
+    * from its lower-(degree, id) endpoint to the higher, so each
+    * triangle is found once, as a wedge u→v, u→w closed by v→w, with
+    * work bounded by Σ d_out² instead of the hub-quadratic unoriented
+    * wedge count. Runs in one task ([[inOneTask]]). */
+  def triangles(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val out = nonNull("node" -> StringType, "degree" -> LongType, "n_triangles" -> LongType)
+    inOneTask(edgeList("triangles", edges, aCol, bCol, None), out) { rows =>
+      val g = new Graph("triangles", rows)
+      val und = g.undirected
+      val deg = g.degrees(und)
+      // node indices follow the id order and a < b, so a degree tie
+      // orients by id
+      val outs = Array.fill(g.nodes.length)(Set.empty[Int])
+      und.foreach { case (a, b) => if (deg(a) <= deg(b)) outs(a) += b else outs(b) += a }
+      val tri = new Array[Long](g.nodes.length)
+      for (u <- outs.indices; v <- outs(u); w <- outs(v) if outs(u)(w))
+        Seq(u, v, w).foreach(x => tri(x) += 1)
+      deg.indices.filter(deg(_) > 0).map(v => Row(g.nodes(v), deg(v).toLong, tri(v)))
+    }
+  }
+
   /** Runs `kernel` over ALL of `rows` inside ONE task and returns its
     * `out`-shaped rows: the rows travel to a single partition (one
     * small shuffle) and the kernel sees them as one array. For
-    * fixed-round iterations over a bounded relation — a service or
-    * vocabulary graph that the corpus-scale aggregation upstream has
-    * already collapsed — where a distributed job per round costs more
-    * than the rounds themselves. The caller owns the bound: `rows` must
-    * fit one task's memory. Lazy: building the frame starts no job, and
+    * iterations over a bounded relation — a service or vocabulary
+    * graph that the corpus-scale aggregation upstream has already
+    * collapsed — where a distributed job per round costs more than the
+    * rounds themselves. The kernel checks the bound
+    * ([[requireOneTask]]). Lazy: building the frame starts no job, and
     * nothing is cached or checkpointed. */
   def inOneTask(rows: DataFrame, out: StructType)(kernel: Array[Row] => Seq[Row]): DataFrame =
     rows.repartition(1)
       .mapPartitions((part: Iterator[Row]) => kernel(part.toArray).iterator)(Encoders.row(out))
 
-  /** The (src, dst, w) relation the fixed-round kernels read: string
-    * node ids and integral weights widened to Long, checked on the
-    * schema so a wrong caller fails at build time. */
+  /** The (src, dst, w) relation the kernels read: string node ids and
+    * integral weights widened to Long (1 per edge when `wCol` is
+    * None), checked on the schema so a wrong caller fails at build
+    * time. */
   private def edgeList(op: String, edges: DataFrame, srcCol: String, dstCol: String,
-      wCol: String): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).as("w"))
+      wCol: Option[String]): DataFrame = {
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      wCol.fold(lit(1L))(col).as("w"))
     val Seq(st, dt, wt) = e.schema.map(_.dataType)
     require(st == StringType && dt == StringType,
       s"$op: node ids must be strings, got $st and $dt")
@@ -212,9 +332,10 @@ object GraphOps {
   /** One kernel call's edge rows: node ids indexed in binary UTF-8
     * order (Spark's and DuckDB's string order) and the edges as
     * parallel (src, dst, w) arrays sorted by (src, dst, w), so every
-    * sum over them runs in a fixed order. A null id or weight throws
-    * an IllegalArgumentException naming `op`: it would otherwise never
-    * join, and a null node would count as dangling. */
+    * sum over them runs in a fixed order. A null id or weight, or more
+    * than [[MaxOneTaskNodes]] nodes, throws an IllegalArgumentException
+    * naming `op`: a null would otherwise never join, and a null node
+    * would count as dangling. */
   private final class Graph(op: String, rows: Array[Row]) {
     rows.foreach { r =>
       if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
@@ -223,65 +344,25 @@ object GraphOps {
     }
     val nodes: Array[String] = rows.flatMap(r => Array(r.getString(0), r.getString(1)))
       .distinct.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0).map(_.toString)
+    requireOneTask(op, nodes.length, "nodes")
     private val index = nodes.zipWithIndex.toMap
     private val sorted = rows.map(r => (index(r.getString(0)), index(r.getString(1)), r.getLong(2)))
       .sorted
     val src: Array[Int] = sorted.map(_._1)
     val dst: Array[Int] = sorted.map(_._2)
     val w: Array[Long] = sorted.map(_._3)
-  }
 
-  /** All-pairs minimum-hop reachability (transitive closure annotated
-    * with shortest hop counts) over a directed edge list →
-    * (src, dst, hops), hops ≥ 1: BFS frontier expansion, where round
-    * h+1 joins ONLY the hop-h frontier against the edge list and
-    * anti-joins pairs already in the closure — so each pair is
-    * recorded exactly at its minimum hop and cycles terminate
-    * naturally (an exhausted frontier IS the fixpoint; no hop bound
-    * in the result semantics). Throws if `maxIter` rounds pass with a
-    * non-empty frontier (graph diameter exceeds the bound) rather
-    * than silently truncating the closure.
-    *
-    * Scale: the edge list is distinct-projected and checkpointed once
-    * before iterating; each round shuffles the CURRENT frontier (the
-    * newly discovered pairs only — never the accumulated closure)
-    * against the edges on dst=src plus one anti-join against the
-    * closure so far. No round rescans the raw input, and lineage is
-    * truncated per round like [[connectedComponents]]. For
-    * service-graph-sized node sets every per-round join broadcasts;
-    * at web-graph scale the identical plan shuffles on the same keys.
-    */
-  def reachability(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 20): DataFrame = {
-    val e = edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst"))
-      .distinct().localCheckpoint()
-    var closure = e.select(col("esrc").as("src"), col("edst").as("dst"),
-      lit(1L).as("hops")).localCheckpoint()
-    var frontier = closure
-    var iter = 1
-    var drained = frontier.isEmpty
-    while (!drained && iter < maxIter) {
-      val next = frontier.join(e, frontier("dst") === e("esrc"))
-        .select(frontier("src"), e("edst").as("dst"))
-        .distinct()
-        .join(closure, Seq("src", "dst"), "left_anti")
-        .withColumn("hops", lit(iter + 1L))
-        .localCheckpoint()
-      val merged = closure.union(next).localCheckpoint()
-      // old frontier/closure frames are superseded; merged and next are
-      // their own checkpoints, so the blocks can go immediately
-      if (!(frontier eq closure)) frontier.unpersist()
-      closure.unpersist()
-      closure = merged
-      frontier = next
-      drained = frontier.isEmpty
-      iter += 1
+    /** The edges as distinct undirected (lower, higher) index pairs,
+      * self-loops dropped. */
+    def undirected: Array[(Int, Int)] =
+      src.indices.filter(i => src(i) != dst(i))
+        .map(i => (math.min(src(i), dst(i)), math.max(src(i), dst(i)))).distinct.toArray
+
+    /** Each node's degree over undirected `pairs`. */
+    def degrees(pairs: Array[(Int, Int)]): Array[Int] = {
+      val deg = new Array[Int](nodes.length)
+      pairs.foreach { case (a, b) => deg(a) += 1; deg(b) += 1 }
+      deg
     }
-    if (!drained)
-      throw new IllegalStateException(
-        s"reachability did not converge within $maxIter rounds " +
-          "(graph diameter exceeds the bound); raise maxIter")
-    frontier.unpersist(); e.unpersist()
-    closure
   }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing (SURVEY.md §2 B12): image/audio/video as
   * opaque `binary` payloads + typed metadata, processed in
@@ -153,13 +152,6 @@ object MultimodalOps {
       })
       .toDF()
   }
-
-  /** Typed media row: payload + metadata travelling together. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false), // image|audio|video
-    StructField("payload", BinaryType, nullable = false),
-    StructField("source", StringType, nullable = true)))
 
   /** Deterministic fake of a codec: "decodes" dimensions/duration from
     * payload bytes. STUB — replace with a real decoder off-image. */

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text/dedup operators shared by the query pack (SURVEY.md §2 B-block).
   * Hash primitives are md5-substring based so the DuckDB oracles can
@@ -180,27 +182,6 @@ object TextOps {
         col("pk").bitwiseAND(lit((1L << 20) - 1)).as("fp"))
   }
 
-  /** Byte-pair-encoding merge training over a corpus — the tokenizer
-    * step of a training-data pipeline, done the way production BPE
-    * trainers do it: the corpus is scanned ONCE into a (word, freq)
-    * relation, and every merge round runs over that vocab-sized
-    * relation (pair counting weights by word frequency), never over
-    * the raw text again. Words are lowercase `[a-z]+` runs, so merged
-    * symbols can live as single chars at codepoints 0x100+round
-    * without colliding with any input symbol; a pair is then always
-    * exactly two chars and `replace`'s left-to-right non-overlapping
-    * greedy application — identical in Spark and ANSI SQL — is the
-    * classic BPE merge.
-    *
-    * Per round: one map-combined pair-count aggregate over the vocab,
-    * a deterministic 1-ROW collect of the argmax pair (count DESC,
-    * pair ASC — the bounded-collect contract, same as
-    * kmeansCentroids' k rows: the driver must know the pair to plan
-    * the next round), then a row-local rewrite of the vocab.
-    * Lineage truncated per round. Returns (round, pair, cnt) — the
-    * learned merge table, `rounds` rows (fewer if the vocab runs out
-    * of repeated pairs).
-    */
   /** Distributed suffix-array construction by PREFIX DOUBLING
     * (Manber–Myers / the Karp–Miller–Rosenberg scheme): round k knows
     * each suffix's rank by its first 2^k characters; round k+1 ranks
@@ -307,38 +288,49 @@ object TextOps {
       .select(col("pos"), col("sa_rank"))
   }
 
+  /** Byte-pair-encoding merge training over a corpus, the way
+    * production BPE trainers do it: the corpus is scanned ONCE into a
+    * map-combined (word, freq) vocab, and every merge round runs over
+    * that vocab in one task ([[GraphOps.inOneTask]], at most
+    * [[GraphOps.MaxOneTaskNodes]] words). Words are lowercase `[a-z]+`
+    * runs, so merged symbols can live as single chars at codepoints
+    * 0x100+round without colliding with any input symbol; a pair is
+    * always two chars, and `replace`'s left-to-right non-overlapping
+    * application — the same in Scala, Spark and SQL — is the classic
+    * BPE merge. Per round: freq-weighted pair counts (Math.addExact,
+    * the ANSI long sum), the argmax by (count DESC, pair ASC in binary
+    * UTF-8 order), a rewrite of the vocab; a round with no pair stops.
+    * Returns (round, pair, cnt), `rounds` rows or fewer.
+    */
   def bpeMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    val s = docs.sparkSession
-    var wf = docs
+    val vocab = docs
       .select(explode(expr(s"regexp_extract_all(lower(`$textCol`), '[a-z]+', 0)")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.Buffer[(Long, String, Long)]()
-    var r = 1
-    var dry = false
-    while (r <= rounds && !dry) {
-      // sequence(1, len-1) needs the >=2 guard: Spark's sequence
-      // DESCENDS for start > stop (len 1 would yield positions [1,0])
-      val top = wf.filter(length(col("w")) >= 2)
-        .select(col("f"), explode(
-          expr("transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("pair"))
-        .groupBy("pair").agg(sum("f").as("cnt"))
-        .orderBy(col("cnt").desc, col("pair")).limit(1)
-        .collect()
-      if (top.isEmpty) dry = true
-      else {
-        val (pair, cnt) = (top(0).getString(0), top(0).getLong(1))
-        merges += ((r.toLong, pair, cnt))
-        val next = wf
-          .withColumn("w", replace(col("w"), lit(pair), lit((256 + r).toChar.toString)))
-          .localCheckpoint()
-        wf.unpersist()
-        wf = next
-        r += 1
+    val out = GraphOps.nonNull("round" -> LongType, "pair" -> StringType, "cnt" -> LongType)
+    GraphOps.inOneTask(vocab, out) { rows =>
+      GraphOps.requireOneTask("bpeMerges", rows.length, "words")
+      var words = rows.map(r => (r.getString(0), r.getLong(1)))
+      val merges = scala.collection.mutable.ArrayBuffer[Row]()
+      var dry = false
+      while (merges.length < rounds && !dry) {
+        val cnt = scala.collection.mutable.HashMap[String, Long]()
+        for ((w, f) <- words; cps = w.codePoints.toArray; i <- 0 until cps.length - 1) {
+          val pair = new String(cps, i, 2)
+          cnt(pair) = Math.addExact(cnt.getOrElse(pair, 0L), f)
+        }
+        dry = cnt.isEmpty
+        if (!dry) {
+          val (pair, c) = cnt.reduce { (a, b) =>
+            val byPair = UTF8String.fromString(b._1).binaryCompare(UTF8String.fromString(a._1))
+            if (b._2 > a._2 || (b._2 == a._2 && byPair < 0)) b else a
+          }
+          val r = merges.length + 1
+          merges += Row(r.toLong, pair, c)
+          val sym = (256 + r).toChar.toString
+          words = words.map { case (w, f) => (w.replace(pair, sym), f) }
+        }
       }
+      merges.toSeq
     }
-    wf.unpersist()
-    import s.implicits._
-    merges.toSeq.toDF("round", "pair", "cnt")
   }
 }

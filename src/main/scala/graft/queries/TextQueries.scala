@@ -2668,70 +2668,19 @@ object TextQueries {
         |WHERE levenshtein(p.k, o.k) <= 14""".stripMargin),
 
     // B56: exact triangle counting + local clustering coefficients
-    // over the term co-occurrence graph, by DEGREE ORIENTATION — the
-    // standard trick that makes triangle enumeration survive skewed
-    // degree distributions at scale: orient every undirected edge
-    // from its lower-(degree, term) endpoint to the higher, making
-    // the graph a DAG where each triangle appears exactly once as a
-    // wedge (u→v, u→w) closed by v→w, so one self-join + one
-    // closing join enumerates them with work bounded by Σ d_out² —
-    // O(E^1.5) under orientation instead of the hub-quadratic
-    // unoriented wedge count. Coefficients divide exact longs
+    // over the term co-occurrence graph (vocabEdges), by DEGREE
+    // ORIENTATION in one task (GraphOps.triangles: each triangle is
+    // found once, with work bounded by Σ d_out²). Coefficients divide exact longs
     // (2·tri / deg·(deg−1)) in fixed operand order.
     "text_graph_triangles" -> QueryDef.sql(
-      (s, dir) => {
-        val bg = Tables.documents(s, dir)
-          .select(split(trim(col("text")), "\\s+").as("t"))
-          .filter(size(col("t")) >= 2)
-          .select(explode(expr(
-            "transform(sequence(1, size(t) - 1), i -> struct(t[i - 1] AS w1, t[i] AS w2))")).as("b"))
-          .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
-          .filter(col("w1") =!= col("w2"))
-        // canonicalize row-locally, then TYPE-level aggregate — the
-        // map-side combine collapses the corpus's bigram instances to
-        // the vocab²-bounded edge set before any exchange (an
-        // instance-level distinct measured 22 s at sf10 vs ~6 s for
-        // the same corpus through kn_lm's combined groupBy)
-        // localCheckpoint: the vocab²-bounded edge set is read by the
-        // degree census, the orientation join, and (via deg) the final
-        // rollup — materialize the bigram explode once (r13)
-        val und = bg.select(least(col("w1"), col("w2")).as("a"),
-            greatest(col("w1"), col("w2")).as("b"))
-          .groupBy("a", "b").agg(count(lit(1)).as("_c")).drop("_c")
-          .localCheckpoint()
-        val deg = und.select(col("a").as("node"))
-          .union(und.select(col("b")))
-          .groupBy("node").agg(count(lit(1)).as("deg"))
-        val withOrd = und
-          .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-          .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-        // localCheckpoint: the oriented edge relation feeds a THREE-way
-        // self-join — uncheckpointed, each of e1/e2/e3 re-derived the
-        // bigram explode + edge aggregate + two degree joins (r13)
-        val or = withOrd.select(
-          when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("a"))
-            .otherwise(col("b")).as("src"),
-          when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("b"))
-            .otherwise(col("a")).as("dst"))
-          .localCheckpoint()
-        val tri = or.as("e1")
-          .join(or.as("e2"), col("e1.dst") === col("e2.src"))
-          .join(or.as("e3"),
-            col("e3.src") === col("e1.src") && col("e3.dst") === col("e2.dst"))
-          .select(col("e1.src").as("x"), col("e1.dst").as("y"), col("e2.dst").as("z"))
-        val perNode = tri
-          .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
-          .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-        deg.join(perNode, Seq("node"), "left")
-          .select(col("node").as("term"), col("deg").as("degree"),
-            coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
-          .withColumn("clustering",
-            when(col("degree") >= 2,
-              (lit(2L) * col("n_triangles")).cast("double") /
-                (col("degree") * (col("degree") - 1L)).cast("double"))
-              .otherwise(lit(0.0)))
-          .orderBy("term")
-      },
+      (s, dir) => graft.operators.GraphOps.triangles(vocabEdges(s, dir), "a", "b")
+        .select(col("node").as("term"), col("degree"), col("n_triangles"))
+        .withColumn("clustering",
+          when(col("degree") >= 2,
+            (lit(2L) * col("n_triangles")).cast("double") /
+              (col("degree") * (col("degree") - 1L)).cast("double"))
+            .otherwise(lit(0.0)))
+        .orderBy("term"),
       """WITH t AS (SELECT regexp_split_to_array(trim(text), '\s+') AS t
         |           FROM documents WHERE len(regexp_split_to_array(trim(text), '\s+')) >= 2),
         |bg AS (SELECT t[CAST(s.i AS INT)] AS w1, t[CAST(s.i AS INT) + 1] AS w2
@@ -3032,25 +2981,27 @@ object TextQueries {
     // Per doc: word count, characters entering the tokenizer, and the
     // token count after all merges (each remaining char = one token),
     // plus the compression ratio as one exact-long division. The
-    // merge table is a bounded collect (= the kmeans-centroid
-    // contract: R rows for R rounds); the encode itself is R chained
-    // row-local replaces inside the scan stage — the corpus shuffles
+    // merge table joins the corpus as one broadcast row of R needles,
+    // so the plan does not depend on the data; the encode
+    // itself is R chained row-local replaces — the corpus shuffles
     // once, for the per-doc rollup. Oracle: the SAME unrolled training
     // CTEs feed R replace steps (dry rounds no-op via COALESCE on
     // both sides).
     "text_bpe_encode" -> QueryDef.sql(
       (s, dir) => {
         val rounds = 6
-        val merges = TextOps.bpeMerges(Tables.documents(s, dir), "text", rounds)
-          .orderBy("round").collect()
-          .map(r => (r.getLong(0).toInt, r.getString(1)))
+        // a dry round's needle is the oracle's never-matching chr(1)
+        val m = (1 to rounds).map(r =>
+          coalesce(max(when(col("round") === r, col("pair"))), lit("\u0001")).as(s"m$r"))
+        val needles = TextOps.bpeMerges(Tables.documents(s, dir), "text", rounds)
+          .agg(m.head, m.tail: _*)
         val words = Tables.documents(s, dir)
           .select(col("doc_id"),
             explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
           .withColumn("chars", length(col("w")).cast("long"))
-        val enc = merges.foldLeft(words) { case (df, (rnd, pair)) =>
-          df.withColumn("w",
-            replace(col("w"), lit(pair), lit((256 + rnd).toChar.toString)))
+          .crossJoin(broadcast(needles))
+        val enc = (1 to rounds).foldLeft(words) { (df, r) =>
+          df.withColumn("w", replace(col("w"), col(s"m$r"), lit((256 + r).toChar.toString)))
         }
         enc.groupBy("doc_id")
           .agg(count(lit(1)).as("n_words"), sum("chars").as("chars_total"),
@@ -3250,46 +3201,15 @@ object TextQueries {
     // the bigram co-occurrence graph — the density view of vocabulary
     // (triangles measure local closure; the k-core is the globally
     // dense backbone term-graph pruning keeps). Each round recomputes
-    // degrees over the surviving edge set and drops nodes below k —
-    // vocab-sized joins only, after the single corpus-sized bigram
-    // collapse; the oracle unrolls the same 6 rounds, so the hash is
-    // exact whether or not the peel has converged (the spec pins
-    // convergence on the test corpus).
+    // degrees over the surviving edge set and drops nodes below k
+    // (GraphOps.kCore, one task over vocabEdges); the oracle unrolls
+    // the same 6 rounds, so the hash is exact whether or not the peel
+    // has converged (the spec pins convergence on the test corpus).
     "text_kcore" -> QueryDef.sql(
-      (s, dir) => {
-        var edges = Tables.documents(s, dir)
-          .select(split(trim(col("text")), "\\s+").as("t"))
-          .filter(size(col("t")) >= 2)
-          .select(explode(expr(
-            "transform(sequence(1, size(t) - 1), i -> struct(t[i - 1] AS w1, t[i] AS w2))")).as("b"))
-          .select(least(col("b.w1"), col("b.w2")).as("a"),
-            greatest(col("b.w1"), col("b.w2")).as("b"))
-          .filter(col("a") =!= col("b"))
-          .groupBy("a", "b").agg(count(lit(1)).as("_c")).drop("_c")
-          // each round references the prior edge set THREE times (two
-          // degree scans + the join); per-round lineage truncation is
-          // what keeps that linear instead of 3^rounds (the GraphOps
-          // iteration discipline)
-          .localCheckpoint()
-        for (_ <- 1 to kcoreRounds) {
-          val alive = edges.select(col("a").as("node"))
-            .union(edges.select(col("b")))
-            .groupBy("node").agg(count(lit(1)).as("deg"))
-            .filter(col("deg") >= kcoreK)
-            .select("node")
-          val next = edges
-            .join(alive.withColumnRenamed("node", "a"), "a")
-            .join(alive.withColumnRenamed("node", "b"), "b")
-            .localCheckpoint()
-          edges.unpersist()
-          edges = next
-        }
-        edges.select(col("a").as("node"))
-          .union(edges.select(col("b")))
-          .groupBy("node").agg(count(lit(1)).as("core_degree"))
-          .select(col("node").as("term"), col("core_degree"))
-          .orderBy("term")
-      },
+      (s, dir) => graft.operators.GraphOps
+        .kCore(vocabEdges(s, dir), "a", "b", kcoreK, kcoreRounds)
+        .select(col("node").as("term"), col("core_degree"))
+        .orderBy("term"),
       kcoreOracle),
 
     // B80: largest-remainder budget apportionment (Hamilton's method)
@@ -3944,6 +3864,24 @@ object TextQueries {
   // `defs` above despite object-initialization order
   private final val kcoreK = 3
   private final val kcoreRounds = 6
+
+  /** The term co-occurrence graph of text_kcore and
+    * text_graph_triangles: adjacent whitespace tokens as distinct
+    * undirected (a, b) edges, a < b. Canonicalized row-locally, then
+    * a TYPE-level aggregate: the map-side combine collapses the
+    * corpus's bigram instances to the vocab²-bounded edge set before
+    * any exchange (an instance-level distinct measured 22 s at sf10 vs
+    * ~6 s for the same corpus through kn_lm's combined groupBy). */
+  private def vocabEdges(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .select(toks(col("text")).as("t"))
+      .filter(size(col("t")) >= 2)
+      .select(explode(expr(
+        "transform(sequence(1, size(t) - 1), i -> struct(t[i - 1] AS w1, t[i] AS w2))")).as("b"))
+      .select(least(col("b.w1"), col("b.w2")).as("a"),
+        greatest(col("b.w1"), col("b.w2")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .groupBy("a", "b").agg(count(lit(1)).as("_c")).drop("_c")
 
   /** Unrolled 6-round 3-core peel over the same bigram edge set.
     * (lazy: `defs` initializes before later-declared plain vals). */

@@ -35,6 +35,18 @@ object TraceQueries {
 
   private def cte(body: String): String = SpanOps.spansSqlCte + "\n" + body
 
+  /** Caller→callee service edges (self-calls dropped) weighted by the
+    * exact floor-mean callee latency — the edge list of
+    * trace_shortest_path and trace_worst_path. */
+  private def callLatencyEdges(s: SparkSession, dir: String): DataFrame = {
+    val sp = spans(s, dir).select("span_id", "parent_span_id", "service", "duration_us")
+    sp.as("c")
+      .join(sp.as("p"), col("c.parent_span_id") === col("p.span_id"))
+      .filter(col("p.service") =!= col("c.service"))
+      .groupBy(col("p.service").as("src"), col("c.service").as("dst"))
+      .agg(expr("sum(c.duration_us) div count(1)").as("w"))
+  }
+
   /** Demo whitelist config (A6/A13): four live fields of four types —
     * two reached through aliases — plus one that never converts
     * (badnum's only source is a non-numeric string), exercising the
@@ -1595,14 +1607,13 @@ object TraceQueries {
 
     // Transitive closure of the service graph with minimum hop counts
     // (C63) — "which services can an incident in X propagate to, and
-    // how many call levels away": BFS frontier fixpoint over the
-    // distinct caller→callee edges (GraphOps.reachability — each round
-    // joins only the newly discovered pairs against the edge list, so
-    // cycles terminate and a pair lands at exactly its minimum hop).
+    // how many call levels away": one BFS per source over the distinct
+    // caller→callee edges (GraphOps.reachability — a node lands at the
+    // first hop that reaches it, so cycles terminate and a pair lands
+    // at exactly its minimum hop; one task over the distinct edges).
     // The oracle re-derives min-hops with a recursive CTE bounded by
     // the node count (shortest paths never need more hops; MIN dedups
-    // the path enumeration). The edge distinct runs before iterating:
-    // the span self-join executes once, not once per round.
+    // the path enumeration).
     "trace_service_reachability" -> QueryDef.sql(
       (s, dir) => {
         val sp = spans(s, dir).select("span_id", "parent_span_id", "service")
@@ -3333,10 +3344,9 @@ object TraceQueries {
     // transitively): the architecture-health question a dependency
     // view exists to answer, since call cycles break incident blast
     // radius reasoning and deploy ordering. Built on
-    // GraphOps.reachability's BFS-frontier closure (log-ish rounds,
-    // per-round lineage truncation); the cycle join runs on the
-    // ≤ #services² closure, never on spans. Oracle: one recursive CTE
-    // closure joined to itself swapped.
+    // GraphOps.reachability's one-task BFS closure; the cycle join
+    // runs on the ≤ #services² closure, never on spans. Oracle: one
+    // recursive CTE closure joined to itself swapped.
     "trace_cycle_detect" -> QueryDef.sql(
       (s, dir) => {
         val sp = spans(s, dir).select("span_id", "parent_span_id", "service")
@@ -3424,34 +3434,16 @@ object TraceQueries {
 
     // C101: all-pairs weighted shortest path over the service graph —
     // "what is the cheapest call chain between any two services" — by
-    // min-plus MATRIX SQUARING: 3 rounds of self-join + group-min
-    // cover every path of <= 8 edges (vs 8 rounds of Bellman-Ford
-    // relaxation; log-rounds is what survives a deep graph at scale —
-    // the iterate is always the pair-keyed distance relation, never
-    // the raw corpus, and every round shuffles on the same (src,dst)
-    // keys). Edge weight = exact floor-mean latency per edge. Cyclic
+    // min-plus MATRIX SQUARING in one task (GraphOps.pathSquaring):
+    // 3 rounds cover every path of <= 8 edges. Edge weight = exact
+    // floor-mean latency per edge. Cyclic
     // graphs are fine: a pair (s,s) row reports the cheapest cycle
     // through s. The oracle unrolls the same 3 squarings.
     "trace_shortest_path" -> QueryDef.sql(
       (s, dir) => {
-        val sp = spans(s, dir).select("span_id", "parent_span_id", "service",
-          "duration_us")
-        val edges = sp.as("c")
-          .join(sp.as("p"), col("c.parent_span_id") === col("p.span_id"))
-          .filter(col("p.service") =!= col("c.service"))
-          .groupBy(col("p.service").as("src"), col("c.service").as("dst"))
-          .agg(expr("sum(c.duration_us) div count(1)").as("w"))
-        var d = edges.localCheckpoint()
-        for (_ <- 1 to 3) {
-          val via = d.as("x").join(d.as("y"), col("x.dst") === col("y.src"))
-            .select(col("x.src").as("src"), col("y.dst").as("dst"),
-              (col("x.w") + col("y.w")).as("w"))
-          val next = d.union(via).groupBy("src", "dst")
-            .agg(min("w").as("w")).localCheckpoint()
-          d.unpersist()
-          d = next
-        }
-        d.select(col("src").as("from_service"), col("dst").as("to_service"),
+        graft.operators.GraphOps
+          .pathSquaring(callLatencyEdges(s, dir), "src", "dst", "w", rounds = 3)(math.min)
+          .select(col("src").as("from_service"), col("dst").as("to_service"),
             col("w").as("min_total_us"))
           .orderBy("from_service", "to_service")
       },
@@ -3481,32 +3473,17 @@ object TraceQueries {
         |FROM d3 ORDER BY 1, 2""".stripMargin)),
 
     // C112: worst-case call chain — the MAX-plus mirror of
-    // trace_shortest_path (same 3 squaring rounds, same pair-keyed
-    // relations, max instead of min): the most expensive ≤8-edge path
+    // trace_shortest_path (same edge list, same 3 squaring rounds in
+    // one task, max instead of min): the most expensive ≤8-edge path
     // between every service pair under floor-mean edge latencies —
     // the capacity-planning bound ("if calls chain badly, how slow
     // can A→B get"). Well-defined on cyclic graphs because the edge
     // bound caps the walk.
     "trace_worst_path" -> QueryDef.sql(
       (s, dir) => {
-        val sp = spans(s, dir).select("span_id", "parent_span_id", "service",
-          "duration_us")
-        val edges = sp.as("c")
-          .join(sp.as("p"), col("c.parent_span_id") === col("p.span_id"))
-          .filter(col("p.service") =!= col("c.service"))
-          .groupBy(col("p.service").as("src"), col("c.service").as("dst"))
-          .agg(expr("sum(c.duration_us) div count(1)").as("w"))
-        var d = edges.localCheckpoint()
-        for (_ <- 1 to 3) {
-          val via = d.as("x").join(d.as("y"), col("x.dst") === col("y.src"))
-            .select(col("x.src").as("src"), col("y.dst").as("dst"),
-              (col("x.w") + col("y.w")).as("w"))
-          val next = d.union(via).groupBy("src", "dst")
-            .agg(max("w").as("w")).localCheckpoint()
-          d.unpersist()
-          d = next
-        }
-        d.select(col("src").as("from_service"), col("dst").as("to_service"),
+        graft.operators.GraphOps
+          .pathSquaring(callLatencyEdges(s, dir), "src", "dst", "w", rounds = 3)(math.max)
+          .select(col("src").as("from_service"), col("dst").as("to_service"),
             col("w").as("max_total_us"))
           .orderBy("from_service", "to_service")
       },

@@ -66,12 +66,13 @@ class GraphOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
       out(("c", "c")) shouldBe 1L // self-loop edge
     }
 
-    it("throws rather than silently truncating when maxIter is too small") {
+    it("leaves no persisted RDD behind") {
       val s = spark
       import s.implicits._
-      val chain = (0 until 6).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "dst")
-      an[IllegalStateException] should be thrownBy
-        GraphOps.reachability(chain, "src", "dst", maxIter = 3).collect()
+      val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "d")).toDF("src", "dst")
+      val before = spark.sparkContext.getPersistentRDDs.size
+      GraphOps.reachability(e, "src", "dst").collect()
+      spark.sparkContext.getPersistentRDDs.size shouldBe before
     }
   }
 
@@ -201,7 +202,8 @@ class GraphOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
       val e = Seq(("a", "b", 1L), (null, "a", 1L), ("b", null, 1L)).toDF("src", "dst", "w")
       for ((op, run) <- Seq[(String, () => Any)](
           "pageRank" -> (() => GraphOps.pageRank(e, "src", "dst", "w", iters = 3).collect()),
-          "labelPropagation" -> (() => GraphOps.labelPropagation(e, "src", "dst", "w", iters = 3).collect()))) {
+          "labelPropagation" -> (() => GraphOps.labelPropagation(e, "src", "dst", "w", iters = 3).collect()),
+          "reachability" -> (() => GraphOps.reachability(e, "src", "dst").collect()))) {
         val thrown = intercept[Exception](run())
         val cause = rootIllegalArgument(thrown)
         withClue(thrown.toString) { cause should not be empty }
@@ -209,8 +211,29 @@ class GraphOpsSpec extends AnyFunSpec with Matchers with SparkTestBase {
       }
     }
 
+    it("fail loudly above the one-task bound, naming the operator and the count") {
+      val s = spark
+      import s.implicits._
+      val n = GraphOps.MaxOneTaskNodes + 1
+      // n distinct [a-z]+ words, and a chain over n nodes
+      val words = (0 until n).map(i => "w" + Integer.toString(i, 26).map(c =>
+        if (c.isDigit) ('a' + (c - '0')).toChar else (c + 10).toChar))
+      val chain = words.zip(words.tail :+ words.head).toDF("src", "dst")
+      for ((op, run) <- Seq[(String, () => Any)](
+          "reachability" -> (() => GraphOps.reachability(chain, "src", "dst").collect()),
+          "bpeMerges" -> (() => graft.operators.TextOps
+            .bpeMerges(Seq(words.mkString(" ")).toDF("text"), "text", rounds = 1).collect()))) {
+        val thrown = intercept[Exception](run())
+        val cause = rootIllegalArgument(thrown)
+        withClue(thrown.toString) { cause should not be empty }
+        cause.get.getMessage should (include(op) and include(n.toString))
+      }
+    }
+
     for (name <- Seq("trace_service_rank", "text_textrank_terms", "text_term_communities",
-        "trace_pagerank", "trace_hits"))
+        "trace_pagerank", "trace_hits", "trace_service_reachability", "trace_cycle_detect",
+        "trace_shortest_path", "trace_worst_path", "text_kcore", "text_graph_triangles",
+        "text_bpe_merges", "text_bpe_encode"))
       it(s"build $name with no Spark job on the building thread") {
         SparkEntry.queries(name)(spark, sfDir).collect()
         jobsDuring(SparkEntry.queries(name)(spark, sfDir)) shouldBe 0

@@ -17,14 +17,19 @@ class QueryPlanShapeSpec extends AnyFunSpec with Matchers with SparkTestBase {
   private def windowOps(p: String): Int = "(?<![A-Za-z])Window ".r.findAllIn(p).length
 
   /** The GraphOps.inOneTask shape: one single-partition exchange into
-    * the kernel's MapPartitions, no cached or local relation, and no
-    * Window beyond the span derivation's parent lag. */
+    * the kernel's MapPartitions, and no cached or local relation. */
   private def oneTaskKernel(p: String): Unit = {
     p should include("Exchange SinglePartition")
     p should include("MapPartitions")
     p should not include "InMemoryTableScan"
     p should not include "LocalTableScan"
     p should not include "CartesianProduct"
+  }
+
+  /** [[oneTaskKernel]] over spans: no Window beyond the span
+    * derivation's parent lag. */
+  private def oneTaskSpanKernel(p: String): Unit = {
+    oneTaskKernel(p)
     val spansPlan = graft.operators.SpanOps.spansFromEvents(Tables.events(spark, sfDir))
       .queryExecution.executedPlan.toString
     windowOps(p) shouldBe windowOps(spansPlan)
@@ -455,18 +460,16 @@ class QueryPlanShapeSpec extends AnyFunSpec with Matchers with SparkTestBase {
       p should not include "Join"
     }
 
-    it("text_kcore truncates lineage every peel round") {
-      val p = plan("text_kcore")
-      // the final plan reads the round-6 checkpoint, not 18 nested joins
-      p should include("Scan ExistingRDD")
-      p should not include "SortMergeJoin"
+    it("text_kcore peels in one task over the collapsed bigram edge set") {
+      // the 6 peel rounds run in the kernel: no per-round joins or
+      // checkpoint scans
+      oneTaskKernel(plan("text_kcore"))
     }
 
-    it("trace_shortest_path iterates over checkpointed pair relations") {
-      val p = plan("trace_shortest_path")
-      p should include("Scan ExistingRDD")
-      p should not include "CartesianProduct"
-    }
+    for (name <- Seq("trace_shortest_path", "trace_worst_path"))
+      it(s"$name squares the service-pair matrix in one task") {
+        oneTaskSpanKernel(plan(name))
+      }
 
     it("q_theil rides one map-combined pass with a broadcast nation dim") {
       val p = plan("q_theil")
@@ -508,7 +511,7 @@ class QueryPlanShapeSpec extends AnyFunSpec with Matchers with SparkTestBase {
       // moves to one partition and the 6 power-iteration rounds run in
       // that one task — no per-round join lineage, no checkpoint scans,
       // no build-time collect frozen into a local relation
-      oneTaskKernel(p)
+      oneTaskSpanKernel(p)
     }
 
     it("trace_bootstrap_ci fans out replicates in the scan and shuffles once") {
@@ -615,7 +618,7 @@ class QueryPlanShapeSpec extends AnyFunSpec with Matchers with SparkTestBase {
       val p = plan("trace_hits")
       // same shape as trace_pagerank: the 8 propagate rounds run in
       // one task over the aggregated edge list
-      oneTaskKernel(p)
+      oneTaskSpanKernel(p)
     }
 
     it("trace_attribution rides user-keyed window shuffles only") {

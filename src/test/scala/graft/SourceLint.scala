@@ -14,20 +14,22 @@ object SourceLint {
       .getOrElse(throw new IllegalStateException(
         "no build.sbt found walking up from CWD — cannot locate the sources"))
 
-  /** The file of every match of `pattern` in the `.scala` files under
-    * `src/<tree>/scala`, one entry per match; block and line comments
-    * are stripped first so Scaladoc mentions don't count. */
-  def sites(tree: String, pattern: String): List[Path] = {
+  /** Every `.scala` file under `src/<tree>/scala` with its code, block
+    * and line comments stripped so Scaladoc mentions don't count. */
+  def code(tree: String): List[(Path, String)] = {
     val root = buildRoot.resolve(s"src/$tree/scala")
     require(Files.isDirectory(root), s"no source tree at $root")
     Using.resource(Files.walk(root)) { walk =>
       walk.iterator().asScala
         .filter(_.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val code = Files.readString(p)
-            .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
-          pattern.r.findAllIn(code).map(_ => p)
-        }.toList
+        .map(p => p -> Files.readString(p)
+          .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", ""))
+        .toList
     }
   }
+
+  /** The file of every match of `pattern` in [[code]], one entry per
+    * match. */
+  def sites(tree: String, pattern: String): List[Path] =
+    code(tree).flatMap { case (p, c) => pattern.r.findAllIn(c).map(_ => p) }
 }
