@@ -2670,8 +2670,8 @@ object TextQueries {
     // B56: exact triangle counting + local clustering coefficients
     // over the term co-occurrence graph (vocabEdges), by DEGREE
     // ORIENTATION in one task (GraphOps.triangles: each triangle is
-    // found once, with work bounded by Σ d_out²). Coefficients divide exact longs
-    // (2·tri / deg·(deg−1)) in fixed operand order.
+    // found once, with work bounded by Σ d_out²). Coefficients divide
+    // exact longs (2·tri / deg·(deg−1)) in fixed operand order.
     "text_graph_triangles" -> QueryDef.sql(
       (s, dir) => graft.operators.GraphOps.triangles(vocabEdges(s, dir), "a", "b")
         .select(col("node").as("term"), col("degree"), col("n_triangles"))

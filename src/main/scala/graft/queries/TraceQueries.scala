@@ -1607,10 +1607,10 @@ object TraceQueries {
 
     // Transitive closure of the service graph with minimum hop counts
     // (C63) — "which services can an incident in X propagate to, and
-    // how many call levels away": one BFS per source over the distinct
-    // caller→callee edges (GraphOps.reachability — a node lands at the
-    // first hop that reaches it, so cycles terminate and a pair lands
-    // at exactly its minimum hop; one task over the distinct edges).
+    // how many call levels away": one BFS per source, in one task, over
+    // the distinct caller→callee edges (GraphOps.reachability — a node
+    // lands at the first hop that reaches it, so cycles terminate and a
+    // pair lands at exactly its minimum hop).
     // The oracle re-derives min-hops with a recursive CTE bounded by
     // the node count (shortest paths never need more hops; MIN dedups
     // the path enumeration).
