@@ -34,10 +34,14 @@ import org.apache.spark.unsafe.types.UTF8String
 object GraphOps {
 
   /** The most nodes (or, for BPE, vocabulary words) a one-task kernel
-    * accepts. The pair kernels hold an n×n matrix, which at this bound
-    * is 16.8M cells (128 MB of longs) — what one task can hold. The
-    * service and vocabulary graphs of every pack have 5 and 31 nodes. */
-  final val MaxOneTaskNodes = 4096
+    * accepts, set by the one cubic kernel, [[pathSquaring]]. Timed in
+    * one task on random out-degree-8 graphs (its matrix is dense by
+    * round 3), it took 0.65 s at 256 nodes, 2.4 s at 512 and 17.7 s at
+    * 1024 — ×8 per doubling, so minutes above this bound — and held
+    * two pairs of 1024² arrays (18 MB). Every other kernel took under
+    * 1.5 s at 1024 nodes. The service and vocabulary graphs of every
+    * pack have 5 and 31 nodes. */
+  final val MaxOneTaskNodes = 1024
 
   /** Throws an IllegalArgumentException naming `op` and the count when
     * `n` `what` exceed [[MaxOneTaskNodes]]. */
@@ -228,15 +232,15 @@ object GraphOps {
   }
 
   /** Best path weights over a weighted directed edge list →
-    * (src, dst, w) by `rounds` synchronous rounds of tropical matrix
-    * squaring, `d'(s, t) = best(d(s, t), d(s, m) + d(m, t))`: every walk
-    * of at most 2^rounds edges, so a max-plus walk stays bounded on a
-    * cyclic graph, and a (s, s) row is the best cycle through s. `best`
-    * is min for the cheapest chains, max for the costliest. Sums are
+    * (src, dst, w) by 3 synchronous rounds of tropical matrix squaring
+    * (the rounds the C101/C112 oracles unroll),
+    * `d'(s, t) = best(d(s, t), d(s, m) + d(m, t))`: every walk of at
+    * most 8 edges, so a max-plus walk stays bounded on a cyclic graph,
+    * and a (s, s) row is the best cycle through s. `best` is min for
+    * the cheapest chains, max for the costliest. Sums are
     * Math.addExact, the ANSI long `+`. Runs in one task ([[inOneTask]]). */
-  def pathSquaring(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-      rounds: Int)(best: (Long, Long) => Long): DataFrame = {
-    require(rounds >= 1, s"pathSquaring needs at least one round, got $rounds")
+  def pathSquaring(edges: DataFrame, srcCol: String, dstCol: String, wCol: String)(
+      best: (Long, Long) => Long): DataFrame = {
     val out = nonNull("src" -> StringType, "dst" -> StringType, "w" -> LongType)
     inOneTask(edgeList("pathSquaring", edges, srcCol, dstCol, Some(wCol)), out) { rows =>
       val g = new Graph("pathSquaring", rows)
@@ -248,7 +252,7 @@ object GraphOps {
         has(c) = true
       }
       g.src.indices.foreach(i => put(g.src(i) * k + g.dst(i), g.w(i)))
-      for (_ <- 1 to rounds) {
+      for (_ <- 1 to 3) {
         val (ph, pd) = (has.clone(), d.clone())
         for (s <- 0 until k; m <- 0 until k if ph(s * k + m); t <- 0 until k if ph(m * k + t))
           put(s * k + t, Math.addExact(pd(s * k + m), pd(m * k + t)))
@@ -261,7 +265,9 @@ object GraphOps {
     * core_degree): `rounds` synchronous rounds, each dropping every
     * edge with an endpoint of degree < k in the previous round's edge
     * set, so the result is exact for `rounds` whether or not the peel
-    * has converged. Runs in one task ([[inOneTask]]). */
+    * has converged. `k` and `rounds` are parameters so that text_kcore
+    * passes the same two constants its oracle SQL unrolls. Runs in one
+    * task ([[inOneTask]]). */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
       rounds: Int): DataFrame = {
     val out = nonNull("node" -> StringType, "core_degree" -> LongType)

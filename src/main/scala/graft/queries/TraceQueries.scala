@@ -3344,7 +3344,7 @@ object TraceQueries {
     // transitively): the architecture-health question a dependency
     // view exists to answer, since call cycles break incident blast
     // radius reasoning and deploy ordering. Built on
-    // GraphOps.reachability's one-task BFS closure; the cycle join
+    // GraphOps.reachability's one-task BFS closure; the cycle pairing
     // runs on the ≤ #services² closure, never on spans. Oracle: one
     // recursive CTE closure joined to itself swapped.
     "trace_cycle_detect" -> QueryDef.sql(
@@ -3356,13 +3356,15 @@ object TraceQueries {
         val edges = child.join(parent, col("pid") === col("sid"))
           .filter(col("caller") =!= col("callee"))
           .select(col("caller").as("src"), col("callee").as("dst"))
-        val closure = graft.operators.GraphOps.reachability(edges, "src", "dst")
-        val back = closure.select(col("src").as("bsrc"), col("dst").as("bdst"),
-          col("hops").as("back_hops"))
-        closure.join(back, col("src") === col("bdst") && col("dst") === col("bsrc"))
-          .filter(col("src") < col("dst"))
-          .select(col("src").as("service_a"), col("dst").as("service_b"),
-            col("hops").as("hops_ab"), col("back_hops").as("hops_ba"))
+        // one read of the closure: a pair's two directions meet in the
+        // group of its (lower, higher) service ids
+        graft.operators.GraphOps.reachability(edges, "src", "dst")
+          .filter(col("src") =!= col("dst"))
+          .groupBy(least(col("src"), col("dst")).as("service_a"),
+            greatest(col("src"), col("dst")).as("service_b"))
+          .agg(max(when(col("src") < col("dst"), col("hops"))).as("hops_ab"),
+            max(when(col("src") > col("dst"), col("hops"))).as("hops_ba"))
+          .filter(col("hops_ab").isNotNull && col("hops_ba").isNotNull)
           .orderBy("service_a", "service_b")
       },
       cte("""
@@ -3442,7 +3444,7 @@ object TraceQueries {
     "trace_shortest_path" -> QueryDef.sql(
       (s, dir) => {
         graft.operators.GraphOps
-          .pathSquaring(callLatencyEdges(s, dir), "src", "dst", "w", rounds = 3)(math.min)
+          .pathSquaring(callLatencyEdges(s, dir), "src", "dst", "w")(math.min)
           .select(col("src").as("from_service"), col("dst").as("to_service"),
             col("w").as("min_total_us"))
           .orderBy("from_service", "to_service")
@@ -3482,7 +3484,7 @@ object TraceQueries {
     "trace_worst_path" -> QueryDef.sql(
       (s, dir) => {
         graft.operators.GraphOps
-          .pathSquaring(callLatencyEdges(s, dir), "src", "dst", "w", rounds = 3)(math.max)
+          .pathSquaring(callLatencyEdges(s, dir), "src", "dst", "w")(math.max)
           .select(col("src").as("from_service"), col("dst").as("to_service"),
             col("w").as("max_total_us"))
           .orderBy("from_service", "to_service")

@@ -9,19 +9,23 @@ import org.scalatest.matchers.should.Matchers
   * change removes more. */
 class CheckpointLintSpec extends AnyFunSpec with Matchers {
 
+  private val call = """\.localCheckpoint\(\)"""
+
   describe("eager localCheckpoint calls") {
     it("stay at or below 38 in src/main") {
-      SourceLint.sites("main", """\.localCheckpoint\(\)""").size should be <= 38
+      SourceLint.sites("main", call).size should be <= 38
     }
 
     it("occur in GraphOps only inside connectedComponents") {
+      val inGraphOps = SourceLint.sites("main", call)
+        .count(_.getFileName.toString == "GraphOps.scala")
       val graphOps = SourceLint.code("main")
         .collectFirst { case (p, c) if p.getFileName.toString == "GraphOps.scala" => c }
         .getOrElse(fail("GraphOps.scala not found"))
-      // members of `object GraphOps` start at two-space indentation
-      val members = graphOps.split("(?m)^  (?=\\S)")
-      members.filter(_.contains("localCheckpoint("))
-        .map(_.takeWhile(_ != '(')) shouldBe Array("def connectedComponents")
+      val from = graphOps.indexOf("def connectedComponents")
+      from should be >= 0
+      val body = graphOps.substring(from, graphOps.indexOf("def ", from + 4))
+      call.r.findAllIn(body).size shouldBe inGraphOps
     }
   }
 }
